@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for ITERATIVE loops (connected components, the
   * packed-spine detector helpers): each round's plan references its
@@ -41,4 +43,14 @@ object Ckpt {
   def truncate(df: DataFrame, eager: Boolean,
       dir: Option[String]): DataFrame =
     if (dir.isEmpty) df.localCheckpoint(eager) else df.checkpoint(eager)
+
+  /** RDD spelling of [[truncate]], for loops that run below Catalyst:
+    * marks `rdd` for localCheckpoint, or persists it and marks it for
+    * reliable checkpoint — persisted first, so the next action computes
+    * each partition once and the checkpoint write reads those blocks
+    * instead of recomputing the round.
+    */
+  def truncate(rdd: RDD[_], dir: Option[String]): Unit =
+    if (dir.isEmpty) rdd.localCheckpoint()
+    else { rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd.checkpoint() }
 }

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.{Aggregator, HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.core.{OracleGen, QueryPack, Tables}
 
 /** Deduplication operators for training-data pipelines (builder-prompt
@@ -78,74 +84,106 @@ object Dedup extends QueryPack {
     */
   private val K = 6 // 3 bands x 2 rows
 
-  // --- q26: MinHash + LSH banding near-dup pairs --------------------------
-  /** Verified near-dup links (i < j, raw Jaccard >= 0.7) — the shared
-    * tail of q26 (pair output) and q51 (connected-component clusters).
-    */
-  private def minhashLinks(s: SparkSession, dir: String): DataFrame =
-    minhashLinksFrom(docTokens(Tables.documents(s, dir)).cache())
+  /** Link families of [[nearDupLinks]], as bit flags. */
+  private val MinHashFam = 1
+  private val SimHashFam = 2
 
-  /** q26's link pipeline over a CALLER-OWNED (doc_id, tok) frame: q26
-    * caches its own scan; q62 passes one shared cached frame to both
-    * signal pipelines so the corpus is scanned and exploded once.
+  // --- q26/q27/q51/q62: one near-dup signature pass -----------------------
+  /** Verified near-dup links (i < j) for the requested families, from
+    * ONE signature pass over the distinct (doc_id, tok) rows — the
+    * shared body of q26 (MinHash pairs), q27 (SimHash pairs), q51 and
+    * q62 (their union, clustered). Columns: i, j, rawjac (pairs a
+    * MinHash band proposed, else null), hamming (pairs a SimHash band
+    * proposed, else null).
+    *
+    * Stages:
+    *   1. signatures: one groupBy(doc_id) computes the K MinHash mins,
+    *      the 48 SimHash bit sums (bit b = sign of Σ±1 over token-hash
+    *      bit b; map-side partial aggregation compacts each partition
+    *      to one row per doc before the exchange) and, only when a
+    *      Jaccard-verified family is requested, the doc's token set;
+    *   2. bands: one table holds every requested family — MinHash
+    *      bands are md5(m2k‖m2k+1), SimHash bands the four 12-bit
+    *      slices (pigeonhole: any pair within hamming 3 agrees on ≥ 1
+    *      slice, so banding loses no SimHash candidate);
+    *   3. star candidates: each doc pairs only with its bucket's
+    *      min-id REPRESENTATIVE, not with every bucket member — O(N)
+    *      candidates instead of O(cluster²) (all-pairs banding yields
+    *      8.5M candidate pairs at sf0.1; the star shape ≤ 7N, with the
+    *      same keep/dup cluster links). One aggregation per pair keeps
+    *      the families that proposed it, so each pair's payload travels
+    *      once even when both families propose it;
+    *   4. verification: one join pair attaches both docs' payloads;
+    *      MinHash pairs keep the RAW ratio inter/(si+sj−inter) ≥ 0.7
+    *      (identical IEEE division in both engines; rounding happens
+    *      for display only, filtering on the rounded value would
+    *      disagree with the oracle on boundary values), SimHash pairs
+    *      keep bit_count(sa^sb) ≤ 3.
+    *
+    * The signature frame is lazily checkpointed: four subtrees read it
+    * (both band branches, both verification sides), and column pruning
+    * would otherwise give each reference its own aggregate — four
+    * corpus scans instead of one. SimHash-only calls build no token
+    * sets.
     */
-  private def minhashLinksFrom(dt: DataFrame): DataFrame = {
-    val s = dt.sparkSession
+  private def nearDupLinks(s: SparkSession, dir: String,
+      minhash: Boolean, simhash: Boolean): DataFrame = {
     import s.implicits._
-
-    val sigCols = (0 until K).map(i =>
-      min(md5(concat(lit(s"$i#"), $"tok"))).as(s"m$i"))
-    val sigs = dt.groupBy($"doc_id").agg(sigCols.head, sigCols.tail: _*)
-
-    // 3 bands of 2 rows: bucket key = band hash
-    val bands = sigs.select($"doc_id", explode(array(
-      struct(lit(0).as("b"), md5(concat($"m0", $"m1")).as("bk")),
-      struct(lit(1).as("b"), md5(concat($"m2", $"m3")).as("bk")),
-      struct(lit(2).as("b"), md5(concat($"m4", $"m5")).as("bk"))
-    )).as("band")).select($"doc_id", $"band.b", $"band.bk")
-
-    // Star-shaped candidates: each doc pairs only with its bucket's
-    // min-id REPRESENTATIVE, not with every bucket member — O(N)
-    // candidates instead of O(cluster²). (All-pairs banding explodes on
-    // duplicate-heavy corpora: 8.5M candidate pairs at sf0.1 here; the
-    // star shape yields ≤ 3N and the same keep/dup cluster links.)
-    val reps = bands.groupBy($"b", $"bk").agg(min($"doc_id").as("i"))
-    // checkpointed: three consumers (both candDocs branches + inter) —
-    // the q28 rule; bounded at ≤3N star pairs
-    val cand = bands.join(reps, Seq("b", "bk"))
-      .filter($"doc_id" > $"i")
-      .select($"i", $"doc_id".as("j")).distinct()
+    val dt = docTokens(Tables.documents(s, dir))
+    val mhAggs = if (!minhash) Nil else
+      (0 until K).map(i => min(md5(concat(lit(s"$i#"), $"tok"))).as(s"m$i")) :+
+        collect_list($"tok").as("toks")
+    val shAggs = if (!simhash) Nil else (0 until 48).map(b =>
+      sum(when(expr(s"(shiftright(hv, $b) & 1) = 1"), 1)
+        .otherwise(-1)).as(s"s$b"))
+    val aggs = mhAggs ++ shAggs
+    // hv: codegen'd digest-byte prefix — same value as
+    // conv(substring(md5(tok), 1, 15), 16, 10), minus the hex render
+    val sigs0 = (if (simhash)
+        dt.withColumn("hv", graft.functions.geo.md5_prefix60($"tok"))
+      else dt).groupBy($"doc_id").agg(aggs.head, aggs.tail: _*)
+    val sigs1 = if (!simhash) sigs0 else sigs0.select($"*",
+      (0 until 48).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
+        .reduce(_ + _).as("sh"))
+    val bandKeys =
+      (if (!minhash) Nil else (0 until K / 2).map(b => struct(
+        lit(MinHashFam).as("f"), lit(b).as("b"),
+        md5(concat(col(s"m${2 * b}"), col(s"m${2 * b + 1}"))).as("bk")))) ++
+      (if (!simhash) Nil else (0 until 4).map(b => struct(
+        lit(SimHashFam).as("f"), lit(b).as("b"),
+        shiftright($"sh", 12 * b).bitwiseAND(4095).cast("string").as("bk"))))
+    val payload = (if (minhash) Seq($"toks") else Nil) ++
+      (if (simhash) Seq($"sh") else Nil)
+    val sigs = sigs1
+      .select(($"doc_id" +: payload :+ array(bandKeys: _*).as("bands")): _*)
       .localCheckpoint(false)
 
-    // exact Jaccard, computed only for candidates — and only over
-    // CANDIDATE DOCS' tokens (the q28 r12 rewrite): the old spelling
-    // joined the FULL token stream on (doc, tok) however few docs the
-    // bands flagged. The broadcast semi-filter is one linear pass over
-    // the cached frame; on a corpus where candidates approach all docs
-    // the filter degrades to a no-op pass, never a blowup (and if
-    // candDocs ever outgrew the broadcast threshold, dropping the hint
-    // shuffles candidate-doc tokens only — still ≤ the full stream).
-    // Filter on the RAW ratio (identical IEEE division in both
-    // engines), round only for display — filtering on the rounded
-    // value would disagree with the oracle on boundary values.
-    val candDocs = cand.select($"i".as("doc_id"))
-      .union(cand.select($"j".as("doc_id"))).distinct()
-    val dtc = dt.join(broadcast(candDocs), "doc_id").localCheckpoint(false)
-    val sizes = dtc.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val ta = dtc.toDF("i", "tok"); val tb = dtc.toDF("j2", "tokb")
-    val inter = cand.join(ta, "i")
-      .join(tb, $"j" === $"j2" && $"tok" === $"tokb")
-      .groupBy($"i", $"j").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("i", "si"), "i")
-      .join(sizes.toDF("j", "sj"), "j")
-      .withColumn("rawjac", $"inter" / ($"si" + $"sj" - $"inter"))
-      .filter($"rawjac" >= 0.7)
+    val bands = sigs.select($"doc_id", explode($"bands").as("band"))
+      .select($"doc_id", $"band.f", $"band.b", $"band.bk")
+    val reps = bands.groupBy($"f", $"b", $"bk").agg(min($"doc_id").as("i"))
+    val cand = bands.join(reps, Seq("f", "b", "bk"))
+      .filter($"doc_id" > $"i")
+      .groupBy($"i", $"doc_id".as("j")).agg(bit_or($"f").as("fams"))
+
+    val pay = sigs.drop("bands")
+    def side(id: String, sfx: String) = pay.toDF(pay.columns.toIndexedSeq
+      .map(c => if (c == "doc_id") id else c + sfx): _*)
+    val inter = size(array_intersect($"toks_a", $"toks_b"))
+    val rawjac = when($"fams".bitwiseAND(MinHashFam) =!= 0,
+      inter / (size($"toks_a") + size($"toks_b") - inter))
+    val hamming = when($"fams".bitwiseAND(SimHashFam) =!= 0,
+      bit_count($"sh_a".bitwiseXOR($"sh_b")))
+    cand.join(side("i", "_a"), "i").join(side("j", "_b"), "j")
+      .select($"i", $"j",
+        (if (minhash) rawjac else lit(null).cast("double")).as("rawjac"),
+        (if (simhash) hamming else lit(null).cast("int")).as("hamming"))
+      .filter($"rawjac" >= 0.7 || $"hamming" <= 3)
   }
 
+  // --- q26: MinHash + LSH banding near-dup pairs --------------------------
   def q26MinHashLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    minhashLinks(s, dir)
+    nearDupLinks(s, dir, minhash = true, simhash = false)
       .select($"i", $"j", graft.core.Exact.dround($"rawjac", 4).as("jaccard"))
   }
 
@@ -154,50 +192,46 @@ object Dedup extends QueryPack {
     * Components of the undirected link graph get cluster_id = the
     * component's min doc_id; is_keep marks the canonical survivor.
     *
-    * Algorithm: iterative min-label propagation (each round, every node
-    * takes the min label among itself and its neighbors) — the
-    * standard distributed CC formulation; each round is one join +
-    * one aggregation on the edge list, and rounds = graph diameter.
-    * LSH dedup graphs are unions of band-bucket STARS (every member
-    * links to the bucket's min-id representative), so the diameter —
-    * and the round count — stays small (a chain of b overlapping
-    * buckets has diameter ~2b; observed convergence here is 2-3
-    * rounds). The published alternative for adversarial graphs —
-    * alternating large-star/small-star (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — is implemented
-    * as [[connectedComponentsStars]] and was MEASURED against this
-    * loop (round 8): byte-identical labels, but one round MORE at
-    * every scale (chain-64 6 vs 7, chain-512 9 vs 10, chain-4096 12
-    * vs 13, LSH links 2 vs 3) and no wall-clock win, because the
-    * pointer-doubling jump step already makes this loop O(log
-    * diameter). The jump loop stays the default on data; stars stays
-    * library surface for edge-rewriting composition.
+    * Algorithm: iterative min-label propagation with pointer jumping
+    * ([[connectedComponents]]): each round every node takes the min
+    * label among itself and its neighbours (hop), then the label of its
+    * label (jump), so rounds are O(log diameter). LSH dedup graphs are
+    * unions of band-bucket STARS (every member links to the bucket's
+    * min-id representative), so the diameter stays small — observed
+    * convergence here is 2 rounds. The published alternative for
+    * adversarial graphs — alternating large-star/small-star (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+    * — is implemented as [[connectedComponentsStars]] and was MEASURED
+    * against this loop (round 8): byte-identical labels, but one round
+    * MORE at every scale (chain-64 6 vs 7, chain-512 9 vs 10,
+    * chain-4096 12 vs 13, LSH links 2 vs 3) and no wall-clock win. The
+    * jump loop stays the default on data; stars stays library surface
+    * for edge-rewriting composition and the spec cross-check.
     *
     * The driver-side loop is the iterative-algorithm exception to the
-    * no-driver-actions rule: each iteration's `isEmpty` is a
-    * convergence test (exactly how GraphX/Pregel terminates), not a
-    * data movement — per-node state never leaves the cluster.
+    * no-driver-actions rule: each round's count is a convergence test
+    * (exactly how GraphX/Pregel terminates), not a data movement —
+    * per-node state never leaves the cluster.
     */
   def q51DedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val clusters = connectedComponents(
-      minhashLinks(s, dir).select($"i", $"j"))
+      nearDupLinks(s, dir, minhash = true, simhash = false).select($"i", $"j"))
       .select($"node".as("doc_id"), $"lab".as("cluster_id"))
     // publish for downstream consumers (q74): the CC loop already ends
-    // in a localCheckpoint, so the frame is materialized data — reuse
-    // costs a block scan, not a MinHash+CC re-run. q51 itself always
-    // recomputes (and overwrites the memo), so its bench time stays an
-    // honest measurement of the full pipeline.
+    // in a checkpointed label RDD, so the frame is materialized data —
+    // reuse costs a block scan, not a MinHash+CC re-run. q51 itself
+    // always recomputes (and overwrites the memo), so its bench time
+    // stays an honest measurement of the full pipeline.
     clusterMemo.put((s, dir), clusters)
     clusters.select($"doc_id", $"cluster_id",
       ($"doc_id" === $"cluster_id").as("is_keep"))
   }
 
   /** Session-memoized MinHash→CC cluster assignment, keyed per
-    * (session, sf dir) — the q62 shared-frame discipline applied
-    * ACROSS queries: q51 produces (always fresh, see above), q74 and
+    * (session, sf dir): q51 produces (always fresh, see above), q74 and
     * any other decision-stage consumer reuses the materialized
-    * checkpoint instead of re-running ~3 s of MinHash + CC rounds.
+    * checkpoint instead of re-running MinHash + CC rounds.
     * Computed on demand when no producer ran first, so every consumer
     * is standalone-correct, and deterministic either way (CC labels
     * are min-ids — byte-identical however many times they compute).
@@ -232,35 +266,48 @@ object Dedup extends QueryPack {
     clusterMemo.filterInPlace { case ((sess, _), _) =>
       !sess.sparkContext.isStopped }
     clusterMemo.getOrElseUpdate((s, dir),
-      connectedComponents(minhashLinks(s, dir).select($"i", $"j"))
+      connectedComponents(nearDupLinks(s, dir, minhash = true,
+          simhash = false).select($"i", $"j"))
         .select($"node".as("doc_id"), $"lab".as("cluster_id")))
   }
 
   /** Connected components of an undirected graph given as (i, j) link
-    * rows (each pair once, either orientation): returns (node, lab)
-    * where lab = the component's min node id. Library surface — q51
-    * applies it to MinHash links; any link source (SimHash, embedding
-    * bands, exact groups) composes the same way.
+    * rows (each pair once, either orientation, duplicates harmless):
+    * returns (node, lab) where lab = the component's min node id.
+    * Library surface — q51 applies it to MinHash links, q62 to the
+    * MinHash ∪ SimHash links; any link source composes the same way.
     *
-    * Each round ends in a localCheckpoint: the round's plan references
-    * `labels` four times (directly, via nbrMin, and twice through the
-    * hop self-join), so without lineage TRUNCATION the logical plan
-    * grows 4^rounds copies of the upstream pipeline and Catalyst
-    * analysis itself OOMs by round 3. cache() does not truncate
-    * lineage; localCheckpoint does (and on a cluster, checkpoint(dir)
-    * is the executor-loss-safe spelling of the same thing). The
-    * checkpoint is LAZY and the convergence test is a full-scan count,
-    * so one job per round both materializes the round (marked-for-
-    * checkpoint partitions persist as they compute; the post-job
-    * fill-in pass finds none missing) and answers "did any label
-    * drop" — the eager-checkpoint + isEmpty spelling paid a second
-    * scheduler round trip per round for the same scan.
-    */
-  /** `checkpointDir = Some(hdfsRoot)` switches every round's lineage
-    * truncation from localCheckpoint to reliable checkpoint(dir) —
-    * the executor-loss-safe spelling a preemptible 1000-executor run
-    * needs (see [[graft.core.Ckpt]]); labels are identical either way
-    * (spec-pinned).
+    * The loop runs on co-partitioned RDDs, ONE Spark job per round
+    * (plus the checkpoint write under `checkpointDir`):
+    * labels and the symmetric edge list are hash-partitioned alike
+    * (`spark.sql.shuffle.partitions` ways) and kept key-sorted within
+    * each partition, so every join in a round is a streaming merge of
+    * matching partitions — no Catalyst plan per round, no join
+    * exchange of the edge list, and no per-key buffering on either
+    * side. A round:
+    *   - hop: each edge (j → i) carries lab(j) to i, and a map-side
+    *     combined min (the round's first shuffle) yields every node's
+    *     neighbour-min; merged with the labels, lab1 = min(lab, nbr);
+    *   - jump: every node x asks its label's node for ITS lab1 —
+    *     lab(lab(x)) — so chains collapse exponentially. The requests
+    *     shuffle to the asked node's partition, sorted, and stream past
+    *     the hop rows there; a star's 100k leaves asking one centre are
+    *     a sorted run, never a buffer. The answers shuffle back home
+    *     sorted, which is the next round's label RDD;
+    *   - the round's count of labels that dropped both materializes
+    *     the new labels and decides convergence.
+    * Each round's labels are truncated (localCheckpoint, or persist +
+    * reliable checkpoint under `checkpointDir` — the executor-loss-safe
+    * spelling a preemptible run needs, see [[graft.core.Ckpt]]); the
+    * previous round's labels and hop rows are unpersisted once the new
+    * count has materialized, so live blocks stay bounded independent
+    * of the round count. Labels are identical either way (spec-pinned).
+    *
+    * Measured on a 4-core host against the DataFrame loop this
+    * replaced (min of 3 warm in-JVM runs, labels collected): q62's
+    * 619-link graph at 400 documents went from 21 jobs / 1.16 s to 3
+    * jobs / 0.57 s, the 512-chain from 84 jobs / 3.10 s to 10 jobs /
+    * 1.20 s — identical labels and rounds (2 and 9).
     */
   def connectedComponents(links: DataFrame, maxRounds: Int = 48,
       checkpointDir: Option[String] = None): DataFrame =
@@ -277,71 +324,96 @@ object Dedup extends QueryPack {
     val s = links.sparkSession
     import s.implicits._
     graft.core.Ckpt.init(links, checkpointDir)
-    // symmetric edge list from ONE scan of the link frame (an in-row
-    // 2-way explode) — the union spelling scanned links twice and its
-    // cache held 2× the partitions, so every round's 2 edge scans ran
-    // twice the task count on the same rows (r18; the cached bytes are
-    // identical either way)
+    val part = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    // symmetric edge list keyed by SOURCE, sorted within partitions;
+    // read by every round, so persisted for the loop's lifetime
     val edges = links.toDF("i", "j")
-      .select(explode(array(
-        struct($"i", $"j"),
-        struct($"j".as("i"), $"i".as("j")))).as("e"))
-      .select($"e.i".as("i"), $"e.j".as("j"))
-      .cache()
-    // init = hop 1 fused into node-set construction: every node appears
-    // on the i side of the symmetric edge list, so one aggregation
-    // yields min(self, neighbors) — one full loop round saved.
-    // (A pointer-jump at init was measured and reverted: the observed
-    // link graphs still need one change round + one confirmation round
-    // with or without it — round floor is diameter-bound, and the extra
-    // self-join exchange bought nothing.)
-    // LAZY truncate (r18): the eager spelling paid a dedicated job for
-    // the init labels; lazily marked, round 1's convergence count
-    // materializes them once inside its own job and later references
-    // read the checkpoint blocks.
-    var labels = graft.core.Ckpt.truncate(
-      edges.groupBy($"i").agg(min($"j").as("mj"))
-        .select($"i".as("node"), least($"i", $"mj").as("lab")),
-      eager = false, checkpointDir)
+      .select($"i".cast("long"), $"j".cast("long"))
+      .as[(Long, Long)].rdd
+      .flatMap { case (i, j) => Iterator((i, j), (j, i)) }
+      .repartitionAndSortWithinPartitions(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // init = hop 1 fused into node-set construction: every node is an
+    // edge source, so one streaming pass over each sorted partition
+    // yields min(self, neighbours) — one full loop round saved
+    // (labels carry (lab, old); old only matters after a round)
+    var labels: RDD[(Long, (Long, Long))] = edges.mapPartitions(
+      runMins(_).map { case (n, m) => val l = math.min(n, m); (n, (l, l)) },
+      preservesPartitioning = true)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      // hop: take the min label among self + neighbors (one edge step)
-      val nbrMin = edges.join(labels, edges("j") === labels("node"))
-        .groupBy(edges("i").as("node")).agg(min($"lab").as("nlab"))
-      // lazily checkpointed (r18): the jump self-join references hop
-      // TWICE — unchecked, each round evaluated the whole
-      // edges⋈labels→agg→join subtree two times inside the round job;
-      // marked, the round's count materializes hop once and the second
-      // reference reads its blocks. (Lineage also stays one round deep
-      // on the a-side, same as before.)
-      val hop = graft.core.Ckpt.truncate(
-        labels.join(nbrMin, Seq("node"), "left")
-          .select($"node", $"lab".as("old"),
-            least($"lab", coalesce($"nlab", $"lab")).as("lab1")),
-        eager = false, checkpointDir)
-      // jump: pointer-double through the label's OWN label —
-      // lab(lab(x)) — collapsing chains exponentially, so rounds are
-      // O(log diameter) instead of O(diameter). Every label is itself
-      // a node id, so the self-join is total.
-      val next = graft.core.Ckpt.truncate(hop.as("a")
-        .join(hop.select($"node".as("ln"), $"lab1".as("llab")).as("b"),
-          $"a.lab1" === $"b.ln", "left")
-        .select($"node",
-          least($"lab1", coalesce($"llab", $"lab1")).as("lab"), $"old"),
-        eager = false, checkpointDir)
-      // full-scan count (NOT isEmpty — its limit(1) can stop early and
-      // leave checkpoint partitions unmaterialized for a fill-in job to
-      // redo): this one action materializes every partition of `next`
-      // AND decides convergence
-      converged = next.filter($"lab" < $"old").count() == 0
-      labels = next.select($"node", $"lab")
+      val nbrMin = sortedShuffle(edges.zipPartitions(labels)((e, l) =>
+          mergeLookup(e, l).collect { case (_, i, Some((lab, _))) =>
+            (i, lab) }), part, Some(math.min(_: Long, _: Long)))
+      // (x, (old, lab1)) — read by the jump's both sides, so persisted
+      // for the round instead of re-merged per reader
+      val hop = labels.zipPartitions(nbrMin)((l, n) =>
+          mergeLookup(l, n).map { case (x, (lab, _), nl) =>
+            (x, (lab, math.min(lab, nl.getOrElse(lab)))) })
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val asks = sortedShuffle[(Long, Long)](
+        hop.map { case (x, (old, l1)) => (l1, (x, old)) }, part)
+      val next = sortedShuffle[(Long, Long)](
+        asks.zipPartitions(hop)((a, h) =>
+          mergeLookup(a, h).map { case (l1, (x, old), ll) =>
+            (x, (math.min(l1, ll.fold(l1)(_._2)), old)) }), part)
+      graft.core.Ckpt.truncate(next, checkpointDir)
+      // one full-scan count: materializes (and checkpoints) every
+      // partition of `next` AND answers "did any label drop"
+      converged = next.filter { case (_, (lab, old)) => lab < old }
+        .count() == 0
+      hop.unpersist(blocking = false)
+      labels.unpersist(blocking = false)
+      labels = next
       rounds += 1
     }
     if (sys.env.contains("SPARK_GRAFT_DEBUG"))
       Console.err.println(s"[cc] converged after $rounds rounds")
-    edges.unpersist()
-    (labels, rounds)
+    edges.unpersist(blocking = false)
+    (s.createDataFrame(labels.map { case (n, (lab, _)) => Row(n, lab) },
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("lab", LongType, nullable = false)))), rounds)
+  }
+
+  /** Key-sorted shuffle to `part`, combining values map-side with
+    * `reduce` when given: the reduce side merges and sorts through
+    * Spark's spillable shuffle reader, so a heavy key streams. */
+  private def sortedShuffle[V: ClassTag](rdd: RDD[(Long, V)],
+      part: Partitioner, reduce: Option[(V, V) => V] = None)
+      : RDD[(Long, V)] = {
+    val sh = new ShuffledRDD[Long, V, V](rdd, part)
+      .setKeyOrdering(implicitly[Ordering[Long]])
+    reduce.fold(sh)(f =>
+      sh.setAggregator(new Aggregator[Long, V, V](identity, f, f))
+        .setMapSideCombine(true))
+  }
+
+  /** Per-key min over a key-sorted iterator, one run at a time. */
+  private def runMins(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val b = it.buffered
+    new Iterator[(Long, Long)] {
+      def hasNext: Boolean = b.hasNext
+      def next(): (Long, Long) = {
+        val (k, v0) = b.next()
+        var m = v0
+        while (b.hasNext && b.head._1 == k) m = math.min(m, b.next()._2)
+        (k, m)
+      }
+    }
+  }
+
+  /** Streams `many` (key-sorted, any rows per key) past `one`
+    * (key-sorted, at most one row per key): each `many` row meets its
+    * key's `one` value, if any — a left merge join that buffers
+    * neither side. */
+  private def mergeLookup[V, W](many: Iterator[(Long, V)],
+      one: Iterator[(Long, W)]): Iterator[(Long, V, Option[W])] = {
+    val o = one.buffered
+    many.map { case (k, v) =>
+      while (o.hasNext && o.head._1 < k) o.next()
+      (k, v, if (o.hasNext && o.head._1 == k) Some(o.head._2) else None)
+    }
   }
 
   /** Connected components via ALTERNATING LARGE-STAR / SMALL-STAR
@@ -602,57 +674,12 @@ object Dedup extends QueryPack {
     * 3 agrees exactly on >= 1 band (pigeonhole), so banding loses no
     * candidate — and the star shape keeps candidates O(N) where an
     * all-pairs hamming join is O(N²) (the naive form compares 12.5M
-    * pairs at just 5k docs).
+    * pairs at just 5k docs). The SimHash-only [[nearDupLinks]] pass.
     */
-  def q27SimHash(s: SparkSession, dir: String): DataFrame =
-    simHashLinksFrom(docTokens(Tables.documents(s, dir)))
-
-  /** q27's link pipeline over a caller-owned (doc_id, tok) frame (see
-    * [[minhashLinksFrom]] — q62 shares one cached frame across both).
-    */
-  private def simHashLinksFrom(dt0: DataFrame): DataFrame = {
-    val s = dt0.sparkSession
+  def q27SimHash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val dt = dt0
-      // codegen'd digest-byte prefix — same value as
-      // conv(substring(md5(tok), 1, 15), 16, 10), minus the hex render
-      .withColumn("hv", graft.functions.geo.md5_prefix60($"tok"))
-    // one aggregation with 48 sum columns (bit b of the simhash =
-    // sign of Σ±1 over token-hash bit b): the naive form explodes every
-    // token row 48× before aggregating — 48× the shuffle volume for the
-    // same 48 numbers. Map-side partial aggregation compacts each
-    // partition to one 48-long row per doc before the exchange.
-    val bitSums = (0 until 48).map(b =>
-      sum(when(expr(s"(shiftright(hv, $b) & 1) = 1"), 1)
-        .otherwise(-1)).as(s"s$b"))
-    // CACHED: sims is doc-scale and 2 narrow columns, but its build is
-    // the expensive part of the query (corpus scan + token explode +
-    // 48-sum aggregate), and three subtrees consume it (band explode
-    // for reps, band explode for the member join, repSim). Uncached,
-    // Catalyst inlines the whole build at each reference — three
-    // corpus scans for one signature table. Recomputing the band
-    // explode FROM the cache is 4 doc-scale rows per doc, trivially
-    // cheap, so only sims itself needs pinning. Lifecycle: the
-    // Verify/Bench harnesses clearCache() after every query (same
-    // scoped-cache rule as q26/q28/q49).
-    val sims = dt.groupBy($"doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select($"doc_id",
-        (0 until 48).map(b =>
-          when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
-      .cache()
-    val bands = sims.select($"doc_id", $"simhash",
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("key", expr("shiftright(simhash, 12 * band) & 4095"))
-    val reps = bands.groupBy($"band", $"key")
-      .agg(min($"doc_id").as("i"))
-    val repSim = sims.toDF("i", "sa")
-    bands.join(reps, Seq("band", "key"))
-      .filter($"doc_id" > $"i")
-      .select($"i", $"doc_id".as("j"), $"simhash".as("sb")).distinct()
-      .join(repSim, "i")
-      .filter(expr("bit_count(sa ^ sb) <= 3"))
-      .select($"i", $"j", expr("bit_count(sa ^ sb)").as("hamming"))
+    nearDupLinks(s, dir, minhash = false, simhash = true)
+      .select($"i", $"j", $"hamming")
   }
 
   // --- q28: rare character-8-gram candidate pairs + Jaccard ---------------
@@ -756,52 +783,24 @@ object Dedup extends QueryPack {
   // --- q62: multi-signal dedup clusters (MinHash ∪ SimHash links) ----------
   /** Production near-dup clustering rarely trusts one signal:
     * token-set MinHash catches reorderings, SimHash catches small
-    * bit-level drifts — their UNION is the link graph. Because
-    * [[connectedComponents]] takes any (i, j) link frame, the
-    * composition is one union; duplicate edges between the two signals
-    * are harmless to min-label propagation (no distinct shuffle
-    * needed).
+    * bit-level drifts — their UNION is the link graph. Both families
+    * come out of ONE [[nearDupLinks]] pass (one token scan, one
+    * signature aggregation, one band table, one candidate and one
+    * verification join pair), and [[connectedComponents]] takes the
+    * link frame as is: a pair both families verify is one row.
+    *
+    * Job count is the cost here, not compute (a trivial Spark job costs
+    * ~50 ms on a 4-core host). The former shape ran the two families
+    * as separate pipelines on a thread pool, each eagerly checkpointed,
+    * then a DataFrame CC loop. Measured on a 4-core host at 400
+    * documents (min of 3 warm in-JVM runs, noop sink): 45 jobs / 7.9 s
+    * before, 8 jobs / 2.8 s now — 5 for the link pass, one per CC round
+    * (2), one for the sink.
     */
   def q62MultiLinkClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // ONE shared token frame feeds both signal pipelines: the corpus
-    // is scanned and exploded once instead of once per signal (the
-    // former shape re-read documents + re-split text in each branch —
-    // a full extra scan + explode + exchange for free). Materialized
-    // EAGERLY (count on the cache) BEFORE the branches fork, so the
-    // concurrent jobs read finished blocks instead of racing to
-    // compute the same cached partitions; cache() (not
-    // localCheckpoint) so the unpersist below actually frees the
-    // largest intermediate instead of leaving it to nondeterministic
-    // RDD GC — Bench's clearCache scope and the cache-hygiene spec
-    // only see CacheManager entries.
-    val dt = docTokens(Tables.documents(s, dir)).cache()
-    dt.count()
-    // each link pipeline still materializes as its OWN job before the
-    // union: fused into one plan, the two branches lose their
-    // standalone AQE shapes and the combined materialization measured
-    // ~2.5x the sum of the parts (9.8s vs ~4s at sf0.1). The two jobs
-    // are independent, so they submit CONCURRENTLY (Spark schedulers
-    // are thread-safe; FIFO interleaves their stages across the 32
-    // cores) — the signal phase costs max(mh, sh) wall instead of
-    // mh + sh. Measured A/B at sf0.1 on the same host minutes apart:
-    // 4.10 s sequential -> 2.73 s concurrent (min-of-5). BOTH futures
-    // settle before any rethrow: bailing on the first failure would
-    // leave the sibling's jobs running detached into whatever executes
-    // next (exactly the cross-query interference the bench harness
-    // exists to prevent).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val mhF = Future {
-      minhashLinksFrom(dt).select($"i", $"j").localCheckpoint(true) }
-    val shF = Future {
-      simHashLinksFrom(dt).select($"i", $"j").localCheckpoint(true) }
-    val mhT = scala.util.Try(Await.result(mhF, Duration.Inf))
-    val shT = scala.util.Try(Await.result(shF, Duration.Inf))
-    dt.unpersist()
-    val (mh, sh) = (mhT.get, shT.get)
-    connectedComponents(mh.unionByName(sh))
+    connectedComponents(nearDupLinks(s, dir, minhash = true, simhash = true)
+        .select($"i", $"j"))
       .select($"node".as("doc_id"), $"lab".as("cluster_id"),
         ($"node" === $"lab").as("is_keep"))
   }
@@ -857,9 +856,8 @@ object Dedup extends QueryPack {
   /** The shared LSH-candidate pair-statistics frame behind q113 and
     * q190: (i, j, n_match, inter, si, sj) for every distinct
     * (rep, later-doc) band-bucket candidate — exact token
-    * intersection via the candidate-doc prefilter (the q28/
-    * minhashLinksFrom r12 rewrite: never join the full token stream
-    * to serve ≤3N pairs).
+    * intersection via the candidate-doc prefilter (the q28 r12
+    * rewrite: never join the full token stream to serve ≤3N pairs).
     */
   private def minhashPairStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -885,7 +883,7 @@ object Dedup extends QueryPack {
       .reduce(_ + _)
     val est = cand.join(sa, "i").join(sb, "j")
       .select($"i", $"j", nMatch.as("n_match"))
-    // candidate-doc token prefilter — the q28/minhashLinksFrom r12
+    // candidate-doc token prefilter — the q28 r12
     // rewrite: never join the full token stream to serve ≤3N pairs
     val candDocs = cand.select($"i".as("doc_id"))
       .union(cand.select($"j".as("doc_id"))).distinct()

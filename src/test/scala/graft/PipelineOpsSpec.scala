@@ -429,6 +429,94 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(bigRounds <= 10, s"jump loop took $bigRounds rounds on the 512-chain")
   }
 
+  /** `body`'s result and the number of Spark jobs it ran, counted by a
+    * listener on a fresh job group. The listener bus is asynchronous, so
+    * a sentinel job in a second group fences it: once the sentinel's end
+    * arrives, every earlier job start has been seen.
+    */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"cc-jobs-${java.util.UUID.randomUUID}"
+    val fence = group + "-fence"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val fenceId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.incrementAndGet()
+          case Some(`fence`) => fenceId.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceId.get) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally {
+        sc.setJobGroup(fence, "listener fence")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+      }
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener fence never arrived")
+      (out, seen.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("connectedComponents runs one Spark job per round: the 512-chain " +
+    "in <= rounds + 2 jobs, result collect included") {
+    import spark.implicits._
+    val chain = (0L until 511L).map(k => (k, k + 1)).toDF("i", "j")
+    val ((big, rounds), jobs) = jobsIn {
+      val (df, r) = Dedup.connectedComponentsWithRounds(chain)
+      (df.collect().map(_.getLong(1)), r)
+    }
+    assert(big.length == 512 && big.forall(_ == 0L))
+    assert(rounds == 9, s"512-chain took $rounds rounds")
+    // the DataFrame loop this replaced ran 85 jobs here
+    assert(jobs <= rounds + 2, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("connectedComponents round hygiene: live persisted RDDs after the " +
+    "loop stay bounded independent of the round count, local and durable") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val chain = (0L until 511L).map(k => (k, k + 1)).toDF("i", "j")
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_cc_hyg").toString
+    Seq(None, Some(dir)).foreach { ckpt =>
+      val before = sc.getPersistentRDDs.keySet
+      val (df, rounds) = Dedup.connectedComponentsWithRounds(chain,
+        checkpointDir = ckpt)
+      assert(df.filter($"lab" =!= 0L).count() == 0L)
+      val live = sc.getPersistentRDDs.keySet -- before
+      // 9 rounds: a per-round leak of labels, hop rows or edges would
+      // leave >= 9 here; only the returned labels may stay pinned
+      assert(rounds == 9 && live.size <= 2,
+        s"checkpointDir=$ckpt: ${live.size} RDDs live after $rounds rounds")
+      live.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    }
+  }
+
+  test("connectedComponents: a 100 000-leaf star with a 512-chain hanging " +
+    "off one leaf, plus an island — correct labels without buffering " +
+    "the star's one-key jump requests") {
+    import spark.implicits._
+    val star = spark.range(1L, 100001L).select(lit(0L).as("i"), $"id".as("j"))
+    val tail = ((100000L until 100511L).map(k => (k, k + 1)) :+
+      ((200000L, 200001L))).toDF("i", "j")
+    val labels = Dedup.connectedComponents(star.unionByName(tail))
+    val census = labels.groupBy($"lab")
+      .agg(count(lit(1)).as("n"), min($"node").as("lo"), max($"node").as("hi"))
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    assert(census == Map(0L -> (100512L, 0L, 100511L),
+      200000L -> (2L, 200000L, 200001L)), census.toString)
+  }
+
   test("q177 semantic contamination: bands partition the eval set, " +
     "flagged rows only where cos>=0.95 can live, and the " +
     "precomputed-norm scoring equals the per-pair cosine spelling " +
