@@ -169,19 +169,11 @@ object Fs {
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new Path(destRoot).getFileSystem(conf)
     val files = listParquet(s, stagedRoot).zipWithIndex
-    // dir creation: one call per DISTINCT destination dir; on the
-    // file: scheme go through java.nio — Hadoop's local mkdirs forks a
-    // shell per created dir for the permission set (~4 ms each, 0.4 s
-    // per 110-dir publish measured); remote schemes keep fs.mkdirs
-    val localFs = fs.getScheme == "file"
+    // dir creation: one call per DISTINCT destination dir (on file:
+    // graft.core.LocalFs sets each new dir's mode without forking)
     files.map(_._1._1).distinct.foreach { relDir =>
-      val destDir =
-        if (relDir.isEmpty) new Path(destRoot)
-        else new Path(destRoot, relDir)
-      if (localFs)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(fs.makeQualified(destDir).toUri.getPath))
-      else fs.mkdirs(destDir)
+      fs.mkdirs(if (relDir.isEmpty) new Path(destRoot)
+        else new Path(destRoot, relDir))
     }
     val par = math.min(16, Runtime.getRuntime.availableProcessors).max(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)

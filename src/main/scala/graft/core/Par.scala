@@ -1,0 +1,47 @@
+package graft.core
+
+import java.util.UUID
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+  Executors, TimeUnit}
+
+import org.apache.spark.sql.SparkSession
+
+/** Independent write pipelines run side by side: a serving setup's
+  * index and sidecar writes land on disjoint paths (`index/`, `_cents`,
+  * `_query`, ...), so running them one after another pays one
+  * driver-side plan/commit gap per artifact with the cluster idle in
+  * between (guide §2.6). Callers must keep the legs' destinations
+  * disjoint (a static overwrite truncates its own root).
+  */
+object Par {
+
+  /** Run every leg on a pool of min(legs, cores) threads and return
+    * when all have finished. On the first failure the siblings are
+    * stopped before the call returns: their Spark jobs are cancelled
+    * (every leg tags its jobs), their threads are interrupted
+    * (`shutdownNow`), and the call waits until every leg has ended
+    * (`awaitTermination`). Then it rethrows that first failure. So no
+    * write of this call is still running when a caller's retry or
+    * cleanup starts on the same paths.
+    */
+  def all(s: SparkSession, legs: Seq[() => Unit]): Unit = {
+    val sc = s.sparkContext
+    val tag = s"graft-par-${UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(
+      math.min(legs.size, Runtime.getRuntime.availableProcessors).max(1))
+    val done = new ExecutorCompletionService[Unit](pool)
+    try {
+      legs.foreach(f => done.submit(() => { sc.addJobTag(tag); f() }))
+      legs.foreach(_ => done.take().get())
+    } catch {
+      case t: Throwable =>
+        sc.cancelJobsWithTag(tag, "a sibling leg failed")
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        throw (t match {
+          case e: ExecutionException => e.getCause
+          case _ => t
+        })
+    } finally pool.shutdown()
+  }
+}

@@ -752,21 +752,6 @@ object Similarity extends QueryPack {
       index.sparkSession.sparkContext.defaultParallelism,
       cols.map(col): _*)
 
-  /** Run independent write pipelines from a small thread pool (guide
-    * §2.6): a serving setup's index + sidecar writes land on DISJOINT
-    * paths (`index/`, `_cents`, `_query`, ...), so serializing them
-    * paid one driver-side plan/commit gap per artifact with the
-    * cluster idle in between. Callers must ensure disjoint
-    * destinations (a static overwrite truncates its own root).
-    */
-  private def inPar(fs: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    try fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = f()
-    })).foreach(_.get())
-    finally pool.shutdown()
-  }
-
   /** Persist a serving index `partitionBy("cell")` — the layout every
     * IVF query in this pack documents: a probe of nprobe cells becomes
     * a PARTITION-PRUNED scan reading only those cells' files
@@ -894,7 +879,7 @@ object Similarity extends QueryPack {
     import s.implicits._
     val emb = embCached(s, dir)
     val (idx, cents) = ivfLearnedOr(emb, k, iters, centsPre)
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => ivfWrite(idx, s"$root/index"),
       () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
@@ -1082,7 +1067,7 @@ object Similarity extends QueryPack {
         cents.select($"cell".as("cl"), $"centroid".as("cvec")))
       .select($"vec_id", $"embedding",
         $"label".cast("long").as("tb"), $"cl".as("cell"))
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => ivfWriteTenants(idx, s"$root/index"),
       () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
@@ -1227,7 +1212,7 @@ object Similarity extends QueryPack {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     val emb = embCached(s, dir)
     val (_, cents) = ivfLearned(emb, k = 8, iters = 2)
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
@@ -1269,7 +1254,7 @@ object Similarity extends QueryPack {
     import s.implicits._
     val emb = embCached(s, dir)
     val (idx, cents) = ivfLearnedOr(emb, k, iters, centsPre)
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => idx.select($"vec_id", $"cell")
         .join(quantizeInt8(emb).select($"vec_id", $"scale",
           transform($"code", _.cast("byte")).as("code")), "vec_id")
@@ -1345,7 +1330,7 @@ object Similarity extends QueryPack {
     import s.implicits._
     val emb = embCached(s, dir)
     val (_, cents) = ivfLearned(emb, k, iters)
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => kmeansAssign(emb,
           cents.select($"cell".as("cl"), $"centroid".as("cvec")))
         .select($"vec_id", $"label".cast("long").as("tb"),
@@ -1765,23 +1750,15 @@ object Similarity extends QueryPack {
       .select($"cl".as("cell"), $"cvec".as("centroid"))
     // the three setups are INDEPENDENT given the shared (eagerly
     // checkpointed) centroids and the memoized emb frame — overlap
-    // them from a small thread pool (guide §2.6) so one build's
-    // driver-side commit gaps back-fill with another's tasks instead
-    // of serializing three write pipelines
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      Seq[() => Unit](
-        () => ivfServingSetup(s, dir, base + "f",
-          centsPre = Some(centsShared)),
-        () => ivfServingSetupSq8(s, dir, base + "s",
-          centsPre = Some(centsShared)),
-        () => ivfServingSetupPq(s, dir, base + "p",
-          centsPre = Some(centsShared)))
-        .map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = f()
-        }))
-        .foreach(_.get())
-    } finally pool.shutdown()
+    // them so one build's driver-side commit gaps back-fill with
+    // another's tasks instead of serializing three write pipelines
+    graft.core.Par.all(s, Seq(
+      () => ivfServingSetup(s, dir, base + "f",
+        centsPre = Some(centsShared)),
+      () => ivfServingSetupSq8(s, dir, base + "s",
+        centsPre = Some(centsShared)),
+      () => ivfServingSetupPq(s, dir, base + "p",
+        centsPre = Some(centsShared))))
     val q0 = broadcast(emb.filter($"vec_id" === 0)
       .select(vec($"embedding").as("qv0")))
     // exact baseline consumed by all three sweeps — one corpus scan
@@ -2349,7 +2326,7 @@ object Similarity extends QueryPack {
       booksAll.filter($"m" === m).select($"cl", $"cvec"))
     // two-level tenant trees hash-distribute (byParts scaladoc);
     // single-level k=8 trees write direct — measured both ways
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => pqEncode(withRes.filter(memberFilter), books, extra)
         .transform(d =>
           if (withTenants) byParts(d, extra :+ "cell": _*) else d)
@@ -2839,24 +2816,16 @@ object Similarity extends QueryPack {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     // the two index BUILDS (IVF serving layout, q164's BM25 temp
     // layout) are independent one-off write pipelines — overlap them
-    // from a 2-thread pool (guide §2.6) so one build's driver-side
-    // commit gaps back-fill with the other's tasks; the probes after
-    // the barrier are exactly q164's batch probe + the stored IVF
-    // batch probe, unchanged
+    // so one build's driver-side commit gaps back-fill with the
+    // other's tasks; the probes after the barrier are exactly q164's
+    // batch probe + the stored IVF batch probe, unchanged
     val bmPath = graft.operators.TextAnalysis.bm25TempIndexPath(dir)
     val bp = new org.apache.hadoop.fs.Path(bmPath)
     bp.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(bp)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      Seq[() => Unit](
-        () => ivfServingSetup(s, dir, root),
-        () => graft.operators.TextAnalysis.bm25IndexWrite(
-          Tables.documents(s, dir), bmPath))
-        .map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = f()
-        }))
-        .foreach(_.get())
-    } finally pool.shutdown()
+    graft.core.Par.all(s, Seq(
+      () => ivfServingSetup(s, dir, root),
+      () => graft.operators.TextAnalysis.bm25IndexWrite(
+        Tables.documents(s, dir), bmPath)))
     val wB = Window.partitionBy($"query_id")
       .orderBy($"score".desc, $"doc_id".asc)
     val bm = graft.operators.TextAnalysis.bm25ProbeBatch(s, bmPath,

@@ -1686,24 +1686,10 @@ object TextAnalysis extends QueryPack {
     // back off disk — an extra scan job and a false dependency), so
     // they are independent writes — overlapped (guide §2.6)
     val lens = bm25DocLens(tokenized)
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => lens.write.mode("overwrite").parquet(s"$path/_docs"),
       () => lens.agg(count(lit(1)).as("nd"), sum($"dl").as("tl"))
         .write.mode("overwrite").parquet(s"$path/_stats")))
-  }
-
-  /** Run independent write pipelines from a small thread pool (guide
-    * §2.6 — one job's driver-side commit gaps back-fill with the
-    * other's tasks). Callers must ensure the legs touch disjoint
-    * paths (and that no leg's static overwrite truncates another's
-    * root).
-    */
-  private def inPar(fs: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    try fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = f()
-    })).foreach(_.get())
-    finally pool.shutdown()
   }
 
   /** Incremental postings APPEND — the ivfAppend story
@@ -2426,7 +2412,7 @@ object TextAnalysis extends QueryPack {
     bm25Postings(tokenized, buckets)
       .write.mode("overwrite").partitionBy("lang", "tb").parquet(path)
     val lens = tokenized.select($"doc_id", $"lang", $"dl")
-    inPar(Seq(
+    graft.core.Par.all(s, Seq(
       () => lens.write.mode("overwrite").parquet(s"$path/_docs"),
       () => lens.groupBy($"lang")
         .agg(count(lit(1)).as("nd"), sum($"dl").as("tl"))

@@ -8,18 +8,26 @@ import org.apache.spark.sql.functions._
   * geoindex (read-only under /root/reference/results/geoindex) — the
   * de-facto golden dataset: 67,180 records in 2,413 3-char-prefix
   * partitions, with the two captured nearest-airport answers
-  * (`Assignment_3.ipynb:687, 732`).
+  * (`Assignment_3.ipynb:687, 732`). The parity specs need that
+  * reference and are canceled (never passed) where it is absent.
   */
 class GeoQuerySpec extends SparkTestBase {
   val refIndex = "/root/reference/results/geoindex"
 
   lazy val routes = Geo.readRoutes(spark, refIndex).cache()
 
+  /** Cancels a parity spec when the reference geoindex is absent. */
+  private def needsReference(): Unit =
+    assume(new java.io.File(refIndex).isDirectory,
+      s"reference geoindex $refIndex is absent")
+
   test("reads the full reference geoindex") {
+    needsReference()
     assert(routes.count() == 67180L)
   }
 
   test("re-encoding lat/lon reproduces every stored reference geohash") {
+    needsReference()
     val mismatches = routes
       .filter(col("geohash").isNotNull)
       .filter(geo.geohash_encode(col("src_airport.latitude"),
@@ -29,12 +37,14 @@ class GeoQuerySpec extends SparkTestBase {
   }
 
   test("3-char prefix partitioning reproduces the reference's 2413 buckets") {
+    needsReference()
     val n = routes.filter(col("geohash").isNotNull)
       .select(substring(col("geohash"), 1, 3)).distinct().count()
     assert(n == 2413L)
   }
 
   test("golden: nearest airport full-scan (Eppley / Astrakhan)") {
+    needsReference()
     val enriched = Geo.enrichGeohash(routes.drop("geohash"))
     assert(Geo.nearestAirport(enriched, 41.1499988, -95.91779)
       == "Eppley Airfield")
@@ -43,6 +53,7 @@ class GeoQuerySpec extends SparkTestBase {
   }
 
   test("index build reproduces the reference's per-prefix record counts exactly") {
+    needsReference()
     import org.apache.spark.sql.functions.input_file_name
     // input_file_name() is empty on cached data, and CacheManager
     // substitutes the cached relation for ANY read of the same path —
@@ -63,6 +74,7 @@ class GeoQuerySpec extends SparkTestBase {
   }
 
   test("golden: pruned index query matches full scan and prunes partitions") {
+    needsReference()
     val tmp = java.nio.file.Files.createTempDirectory("geoidx").toString
     Geo.writeGeoIndex(routes.drop("geohash"), tmp)
 
@@ -137,7 +149,7 @@ class GeoQuerySpec extends SparkTestBase {
   }
 
   test("typed Dataset[Route]: compile-checked field access on a subtree") {
-    val ds = Geo.readRoutesTyped(spark, s"$refIndex/b/b1")
+    val ds = Geo.readRoutesTyped(spark, routesFixture)
     val names = ds
       .filter(_.src_airport.exists(_.latitude.exists(_ > 50)))
       .map(_.src_airport.flatMap(_.name).getOrElse(""))(

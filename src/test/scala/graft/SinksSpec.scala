@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
 
 class SinksSpec extends SparkTestBase {
 
-  // the d/ subtree holds ~10k reference records across many gz files
-  lazy val routes = Geo.readRoutes(spark,
-    "/root/reference/results/geoindex/d").cache()
+  lazy val routes = Geo.readRoutes(spark, routesFixture).cache()
 
   test("orc sink: native columnar write, lossless roundtrip with " +
     "predicate pushdown reaching the ORC scan") {

@@ -11,6 +11,9 @@ trait SparkTestBase extends AnyFunSuite
     with org.scalatest.BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+  /** 520 FIXTURES.md §1 route records (tools/gen_routes_fixture.py). */
+  val routesFixture: String =
+    new java.io.File(getClass.getResource("/routes").toURI).getPath
 
   /** Caches are test-local: queries that .cache() intra-query frames
     * (q26/q112/q122, ...) must not leak them across tests — a cached
