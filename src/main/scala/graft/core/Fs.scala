@@ -3,7 +3,8 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Hadoop-FileSystem path helpers for the serving layouts' sidecar
   * directories (`_tombstones`, `_stats`). `java.io.File` only
@@ -43,6 +44,26 @@ object Fs {
   def exists(s: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Read a layout's sidecar directory (`_cents`, `_query`,
+    * `index/_tombstones`, ...) with the schema its writer used. Its
+    * part files are listed here and handed to the reader: no
+    * schema-inference job runs, and the read does not rest on Spark
+    * keeping a root path whose `_` prefix its own listing treats as
+    * hidden (it warns "All paths were ignored" and reads it anyway).
+    * A missing directory fails the read; a sidecar without part files
+    * (every writer task was empty) reads as an empty frame.
+    */
+  def readSidecar(s: SparkSession, dir: String, schema: StructType): DataFrame = {
+    val p = new Path(dir)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq.map(_.getPath)
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(_.toString)
+    if (files.isEmpty)
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else s.read.schema(schema).parquet(files: _*)
   }
 
   /** Recursive delete (used by build+probe oracle rows to clean up
@@ -161,8 +182,11 @@ object Fs {
     * serializing hundreds of round-trips (measured 1.4–1.8 s
     * driver-side gaps per q203 micro-batch at sf0.1; on an object
     * store, where rename is copy+delete, the serial form is strictly
-    * worse). Determinism of published NAMES is unchanged: k is
-    * assigned from the sorted listing before any rename runs.
+    * worse). The pool is [[Par.all]]'s: a failed rename stops the
+    * sibling renames before this returns, so a caller's scrub-and-retry
+    * never races a rename still in flight. Determinism of published
+    * NAMES is unchanged: k is assigned from the sorted listing before
+    * any rename runs.
     */
   def publishParquet(s: SparkSession, stagedRoot: String, destRoot: String,
       tag: String): Unit = {
@@ -175,28 +199,19 @@ object Fs {
       fs.mkdirs(if (relDir.isEmpty) new Path(destRoot)
         else new Path(destRoot, relDir))
     }
-    val par = math.min(16, Runtime.getRuntime.availableProcessors).max(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    try {
-      val tasks = files.map { case ((relDir, src), k) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            val destDir =
-              if (relDir.isEmpty) new Path(destRoot)
-              else new Path(destRoot, relDir)
-            val dest = new Path(destDir, s"$tag-$k.parquet")
-            if (!fs.rename(src, dest)) {
-              // a half-published prior attempt the scrub missed (e.g.
-              // a non-atomic store listing lag): clear and retry once
-              if (fs.exists(dest)) fs.delete(dest, false)
-              if (!fs.rename(src, dest))
-                throw new java.io.IOException(s"rename $src -> $dest failed")
-            }
-          }
-        })
+    Par.all(s, files.map { case ((relDir, src), k) => () =>
+      val destDir =
+        if (relDir.isEmpty) new Path(destRoot)
+        else new Path(destRoot, relDir)
+      val dest = new Path(destDir, s"$tag-$k.parquet")
+      if (!fs.rename(src, dest)) {
+        // a half-published prior attempt the scrub missed (e.g.
+        // a non-atomic store listing lag): clear and retry once
+        if (fs.exists(dest)) fs.delete(dest, false)
+        if (!fs.rename(src, dest))
+          throw new java.io.IOException(s"rename $src -> $dest failed")
       }
-      tasks.foreach(_.get())
-    } finally pool.shutdown()
+    })
   }
 
   /** Delete every published file named `<tag>-*.parquet` anywhere

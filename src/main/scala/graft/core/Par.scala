@@ -12,6 +12,15 @@ import org.apache.spark.sql.SparkSession
   * driver-side plan/commit gap per artifact with the cluster idle in
   * between (guide §2.6). Callers must keep the legs' destinations
   * disjoint (a static overwrite truncates its own root).
+  *
+  * Every serving setup's legs were measured against running them one
+  * after another (`tools/par_seq_twin.sh` builds that twin;
+  * `tools/ab.sh` compares the two): no setup was faster sequential.
+  * The stored SQ8, PQ, tenant-PQ, q204 and q199 builds gain 1.15–1.36×;
+  * the others 1.03–1.06×, which is inside their run-to-run spread.
+  * The other multi-step writes that need the failure law route
+  * through here too: `Fs.publishParquet`'s renames and
+  * `Compaction.compactPartitioned`'s per-leaf writes.
   */
 object Par {
 
@@ -21,8 +30,13 @@ object Par {
     * (every leg tags its jobs), their threads are interrupted
     * (`shutdownNow`), and the call waits until every leg has ended
     * (`awaitTermination`). Then it rethrows that first failure. So no
-    * write of this call is still running when a caller's retry or
-    * cleanup starts on the same paths.
+    * leg's driver-side work (a rename, a job submission) is still
+    * running when a caller's retry or cleanup starts on the same
+    * paths. The call waits for the legs, not for their Spark tasks: a
+    * leg blocked in a job returns as soon as it is interrupted, while
+    * the killed task may still be running on an executor until it
+    * notices the kill (ParSpec's job and compaction cases poll for
+    * it).
     */
   def all(s: SparkSession, legs: Seq[() => Unit]): Unit = {
     val sc = s.sparkContext

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 import graft.core.{QueryPack, Tables}
 
 /** Similarity search over the embedding column (builder-prompt
@@ -545,6 +546,80 @@ object Similarity extends QueryPack {
         Seq($"best.cl".as("cl"), $"best.d2".as("d2")): _*)
   }
 
+  /** A trained coarse quantizer held on the driver: its k (cell,
+    * centroid) rows in [[CentsSchema]] form, exactly as collected
+    * (bounded by k, never by the corpus). Every consumer of one
+    * trajectory — the index assignment, the `_cents` write, the PQ
+    * residuals — reads these rows instead of re-running the Lloyd
+    * rounds, and assignment against them needs no broadcast job: the
+    * rows ride a literal inside `nearest_centroid`.
+    */
+  private[graft] final case class Quantizer(rows: Seq[Row]) {
+    /** The rows as `nearest_centroid`'s packed array<struct<cl, cvec>>
+      * argument — a literal, so the assignment is one projection.
+      */
+    def packed: Column = org.apache.spark.sql.GraftGlue.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(rows,
+        ArrayType(
+          StructType.fromDDL(
+            "cl BIGINT, cvec ARRAY<DOUBLE>"))))
+
+    /** (cell, centroid) as a one-partition local frame — the `_cents`
+      * sidecar rows, written as one file.
+      */
+    def frame(s: SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), CentsSchema)
+        .coalesce(1)
+
+    /** The nearest cell of `v` (array<double>): [[kmeansAssign]]'s
+      * argmin (same composed-dot d2, ties to the smallest cell).
+      */
+    def cellOf(v: Column): Column =
+      graft.functions.geo.nearest_centroid(v, packed).getField("cl")
+  }
+
+  private[graft] object Quantizer {
+    /** Collect a (cell, centroid) frame — k rows — to the driver. */
+    def of(cents: DataFrame): Quantizer =
+      Quantizer(cents.select(col("cell").cast("long"),
+        vec(col("centroid"))).collect().toSeq)
+  }
+
+  /** Train the coarse quantizer once: [[ivfLearned]]'s trajectory
+    * (seeds = vec_id 1..k, then `iters - 1` Lloyd updates), each
+    * round's k centroid rows collected to the driver and fed to the
+    * next assignment as a literal. A round is one k-row aggregation
+    * over one zero-shuffle projection; nothing else is scheduled.
+    */
+  private[graft] def ivfTrain(emb: DataFrame, k: Int, iters: Int): Quantizer = {
+    import emb.sparkSession.implicits._
+    require(iters >= 1, "iters must be >= 1")
+    val seeds = Quantizer.of(emb.filter($"vec_id".between(1L, k.toLong))
+      .select($"vec_id".as("cell"), $"embedding".as("centroid")))
+    (1 until iters).foldLeft(seeds) { (q, _) =>
+      Quantizer.of(kmeansUpdate(emb.select($"embedding",
+          q.cellOf(vec($"embedding")).as("cl")))
+        .select($"cl".as("cell"), $"cvec".as("centroid")))
+    }
+  }
+
+  /** Assign every vector to its nearest cell of a driver-side
+    * quantizer: (vec_id, embedding, extra…, cell) in one projection —
+    * the one frozen-centroid assignment every IVF build, append and
+    * ingest stream runs. `extra` rides the same projection (a tenant
+    * tag), so no vec_id re-join follows.
+    */
+  private[graft] def ivfAssign(emb: DataFrame, q: Quantizer,
+      extra: Column*): DataFrame =
+    emb.select((col("vec_id") +: col("embedding") +: extra :+
+      q.cellOf(vec(col("embedding"))).as("cell")): _*)
+
+  /** A stored layout's frozen quantizer: its `_cents` sidecar's k rows
+    * read with their writer's schema and collected to the driver.
+    */
+  private[graft] def ivfQuantizer(s: SparkSession, root: String): Quantizer =
+    Quantizer.of(graft.core.Fs.readSidecar(s, s"$root/_cents", CentsSchema))
+
   /** One Lloyd update round: new centroid = per-dimension mean of the
     * cluster's members, built from round(v·2^20) integer sums (q77's
     * exactness rule: the snap is exact for any float and dyadic halves
@@ -631,23 +706,19 @@ object Similarity extends QueryPack {
     * against q29's exact answer.
     *
     * Scale shape: the training rounds are q102's (zero-shuffle
-    * assignment projections + one k-row aggregation per round); the
-    * serving index is then written `partitionBy("cell")` so a probe is
-    * a partition-pruned scan of nprobe cells; the k-row centroid table
-    * broadcasts.
+    * assignment projections + one k-row aggregation per round), run
+    * ONCE by [[ivfTrain]] when this is called: the k centroid rows
+    * land on the driver, the returned index assigns against them as
+    * a literal inside `nearest_centroid` (one projection, no
+    * broadcast job), and the returned centroid table is a local
+    * frame over the same rows — re-reading either re-runs no Lloyd
+    * round. The serving index is then written `partitionBy("cell")`
+    * so a probe is a partition-pruned scan of nprobe cells.
     */
   def ivfLearned(emb: DataFrame, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
-    import emb.sparkSession.implicits._
-    require(iters >= 1, "iters must be >= 1")
-    val cent0 = emb.filter($"vec_id".between(1L, k.toLong))
-      .select($"vec_id".as("cl"), vec($"embedding").as("cvec"))
-    val cents = (1 until iters).foldLeft(cent0) { (c, _) =>
-      kmeansUpdate(kmeansAssign(emb, c))
-    }
-    val idx = kmeansAssign(emb, cents)
-      .select($"vec_id", $"embedding", $"cl".as("cell"))
-    (idx, cents.select($"cl".as("cell"), $"cvec".as("centroid")))
+    val q = ivfTrain(emb, k, iters)
+    (ivfAssign(emb, q), q.frame(emb.sparkSession))
   }
 
   /** Probe the learned index: nprobe cells by smallest squared L2
@@ -752,6 +823,111 @@ object Similarity extends QueryPack {
       index.sparkSession.sparkContext.defaultParallelism,
       cols.map(col): _*)
 
+  /** The schemas the stored-IVF writers produce, declared by their
+    * readers ([[graft.core.Fs.readSidecar]] for the `_`-prefixed
+    * sidecars, `read.schema` for the compressed indexes), so no read
+    * of a stored layout runs a schema-inference job. Index partition
+    * columns are declared long, the type the build wrote.
+    */
+  private[graft] val CentsSchema =
+    StructType.fromDDL("cell BIGINT, centroid ARRAY<DOUBLE>")
+  private[graft] val QuerySchema =
+    StructType.fromDDL("qv ARRAY<DOUBLE>")
+  private[graft] val QueriesSchema =
+    StructType.fromDDL("query_id BIGINT, qv ARRAY<DOUBLE>")
+  private[graft] val BooksSchema =
+    StructType.fromDDL("m INT, cl BIGINT, cvec ARRAY<DOUBLE>")
+  private[graft] val TombSchema =
+    StructType.fromDDL("vec_id BIGINT")
+  private val Sq8IndexSchema = StructType.fromDDL(
+    "vec_id BIGINT, scale DOUBLE, code ARRAY<TINYINT>, cell BIGINT")
+  private val PqIndexSchema = StructType.fromDDL(
+    "vec_id BIGINT, code ARRAY<TINYINT>, cell BIGINT")
+
+  /** The sidecar schema of each carried IVF sidecar, by directory name. */
+  private[graft] val SidecarSchemas = Map("_cents" -> CentsSchema,
+    "_query" -> QuerySchema, "_queries" -> QueriesSchema,
+    "_books" -> BooksSchema)
+
+  /** The distinct tombstoned vec_ids under an index root, or None when
+    * nothing was ever deleted.
+    */
+  private[graft] def ivfTombstones(s: SparkSession,
+      indexPath: String): Option[DataFrame] = {
+    val tombPath = s"$indexPath/_tombstones"
+    if (!graft.core.Fs.exists(s, tombPath)) None
+    else Some(graft.core.Fs.readSidecar(s, tombPath, TombSchema).distinct())
+  }
+
+  /** The cells a stored single-query probe reads: the `_cents` rows in
+    * probe order (the first nprobe by (qd2 asc, cell asc)) and the
+    * `_query` row they were ranked against (None when the layout
+    * stores no query, which probes as empty).
+    */
+  private[graft] final case class CellPick(picked: Seq[Row],
+      query: Option[Row]) {
+    def cells: Seq[Long] = picked.map(_.getLong(0))
+    /** The query vector as a literal — probes score against it
+      * without a broadcast of the `_query` sidecar.
+      */
+    def qv: Column = org.apache.spark.sql.GraftGlue.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        query.map(_.get(0)).orNull,
+        ArrayType(
+          DoubleType)))
+  }
+
+  /** Pick a stored layout's nprobe cells on the driver — the one cell
+    * picker every stored single-query probe shares. Both sidecars
+    * are read with their writers' schemas (one small job each, no
+    * inference job) and the k centroid rows are ranked here with
+    * [[graft.functions.VectorMath.dot]]: qd2 = q·q − 2·q·c + c·c in
+    * `dot_product`'s operation order, ordered (qd2 asc nulls first,
+    * cell asc) under Spark's double ordering — the same cells, in
+    * the same order, as the `_cents ⨯ _query → orderBy → limit`
+    * spelling it replaces (PipelineOpsSpec pins the equality).
+    */
+  private[graft] def ivfPickCells(s: SparkSession, root: String,
+      nprobe: Int): CellPick = {
+    import graft.functions.VectorMath
+    val query = graft.core.Fs.readSidecar(s, s"$root/_query", QuerySchema)
+      .collect()
+    require(query.length <= 1,
+      s"$root/_query holds ${query.length} rows; a stored probe takes one")
+    val picked = query.headOption.toSeq.flatMap { q =>
+      def arr(r: Row, i: Int) =
+        if (r.isNullAt(i)) null
+        else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          r.getSeq[Any](i).toArray)
+      val qa = arr(q, 0)
+      def qd2(c: Row): java.lang.Double = {
+        val ca = arr(c, 1)
+        if (qa == null || ca == null) null
+        else {
+          val qq = VectorMath.dot(qa, qa)
+          val qc = VectorMath.dot(qa, ca)
+          val cc = VectorMath.dot(ca, ca)
+          if (qq == null || qc == null || cc == null) null
+          else qq.doubleValue - 2.0 * qc.doubleValue + cc.doubleValue
+        }
+      }
+      val byRank: Ordering[(java.lang.Double, Row)] = {
+        case ((da, ca), (db, cb)) =>
+          val byD2 =
+            if (da == null || db == null) {
+              if (da == null && db == null) 0 else if (da == null) -1 else 1
+            } else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+              .compareDoubles(da, db)
+          if (byD2 != 0) byD2
+          else java.lang.Long.compare(ca.getLong(0), cb.getLong(0))
+      }
+      graft.core.Fs.readSidecar(s, s"$root/_cents", CentsSchema).collect()
+        .toSeq.map(c => (qd2(c), c)).sorted(byRank)
+        .map(_._2).take(nprobe)
+    }
+    CellPick(picked, query.headOption)
+  }
+
   /** Persist a serving index `partitionBy("cell")` — the layout every
     * IVF query in this pack documents: a probe of nprobe cells becomes
     * a PARTITION-PRUNED scan reading only those cells' files
@@ -771,27 +947,12 @@ object Similarity extends QueryPack {
     * the retrain-free half of incremental IVF maintenance: the exact
     * [[kmeansAssign]] rule (bit-parity d2, smallest-cell ties) against
     * frozen centroids, so a vector appended today lands in the same
-    * cell a full retrain-free rebuild would put it in. Zero-shuffle
-    * (the k-row centroid table broadcasts into one projection).
+    * cell a full retrain-free rebuild would put it in. `cents` (k rows)
+    * is collected once and assigned against by [[ivfAssign]]: one
+    * zero-shuffle projection.
     */
   def ivfAssignNew(newEmb: DataFrame, cents: DataFrame): DataFrame =
-    kmeansAssign(newEmb,
-      cents.select(col("cell").as("cl"), col("centroid").as("cvec")))
-      .select(col("vec_id"), col("embedding"), col("cl").as("cell"))
-
-  /** [[ivfAssignNew]] with the tenant tag carried through — the
-    * assignment projection passes `tb` along (kmeansAssign's
-    * pass-through contract), so a multi-tenant CRUD batch lands in
-    * its `(tb, cell)` dirs without a vec_id re-join. Cell choice is
-    * tenant-independent (pure function of the vector against frozen
-    * centroids) — the q191 isolation law holds for streamed rows by
-    * construction.
-    */
-  def ivfAssignNewTenants(newEmb: DataFrame, cents: DataFrame): DataFrame =
-    kmeansAssign(newEmb,
-      cents.select(col("cell").as("cl"), col("centroid").as("cvec")))
-      .select(col("vec_id"), col("embedding"), col("tb"),
-        col("cl").as("cell"))
+    ivfAssign(newEmb, Quantizer.of(cents))
 
   /** Incremental IVF maintenance — the ANN analogue of q61's
     * incremental dedup (reference analogue: the pretrained-model
@@ -839,14 +1000,12 @@ object Similarity extends QueryPack {
     */
   def ivfReadLive(s: SparkSession, path: String): DataFrame = {
     val idx = ivfRead(s, path)
-    // Resolve existence through the path's OWN FileSystem — a
+    // existence resolves through the path's OWN FileSystem — a
     // java.io.File check is silently false for hdfs://s3a:// roots,
     // which would serve deleted vectors as live (the exact takedown
-    // case tombstones exist for).
-    if (!graft.core.Fs.exists(s, s"$path/_tombstones")) idx
-    else idx.join(
-      broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
-      Seq("vec_id"), "left_anti")
+    // case tombstones exist for)
+    ivfTombstones(s, path).fold(idx)(t =>
+      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
   }
 
   /** Persist everything an IVF probe needs so serving never retrains
@@ -855,33 +1014,19 @@ object Similarity extends QueryPack {
     * query vector at `root/_query` (stand-in for the request payload —
     * a real service gets it over the wire). One-off build cost;
     * [[ivfProbeStored]] then reads ≤nprobe cells' files per query
-    * however large the corpus.
+    * however large the corpus. `centsPre` is a quantizer the caller
+    * already trained on the same trajectory — q204 builds three
+    * layouts over one corpus and shares one [[ivfTrain]] between them.
     */
-  /** [[ivfLearned]] unless the caller already trained the SAME
-    * trajectory's centroids (`centsPre` in (cell, centroid) form) —
-    * q204 builds three layouts over one corpus and was re-running the
-    * identical coarse training three times (r17); assignment against
-    * the precomputed table is the frozen-centroid projection.
-    */
-  private def ivfLearnedOr(emb: DataFrame, k: Int, iters: Int,
-      centsPre: Option[DataFrame]): (DataFrame, DataFrame) =
-    centsPre match {
-      case Some(c) =>
-        (kmeansAssign(emb,
-          c.select(col("cell").as("cl"), col("centroid").as("cvec")))
-          .select(col("vec_id"), col("embedding"), col("cl").as("cell")), c)
-      case None => ivfLearned(emb, k, iters)
-    }
-
   def ivfServingSetup(s: SparkSession, dir: String, root: String,
       k: Int = 8, iters: Int = 2,
-      centsPre: Option[DataFrame] = None): Unit = {
+      centsPre: Option[Quantizer] = None): Unit = {
     import s.implicits._
     val emb = embCached(s, dir)
-    val (idx, cents) = ivfLearnedOr(emb, k, iters, centsPre)
+    val q = centsPre.getOrElse(ivfTrain(emb, k, iters))
     graft.core.Par.all(s, Seq(
-      () => ivfWrite(idx, s"$root/index"),
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => ivfWrite(ivfAssign(emb, q), s"$root/index"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
         .write.mode("overwrite").parquet(s"$root/_query"),
@@ -904,10 +1049,12 @@ object Similarity extends QueryPack {
       k: Int = 10): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val qs = broadcast(s.read.parquet(s"$root/_queries"))
+    val qs = broadcast(
+      graft.core.Fs.readSidecar(s, s"$root/_queries", QueriesSchema))
     val pickW = Window.partitionBy($"query_id")
       .orderBy($"qd2".asc, $"cell".asc)
-    val probe = broadcast(s.read.parquet(s"$root/_cents").crossJoin(qs)
+    val probe = broadcast(graft.core.Fs.readSidecar(s, s"$root/_cents",
+        CentsSchema).crossJoin(qs)
       .withColumn("qd2", dot($"qv", $"qv")
         - lit(2.0) * dot($"qv", $"centroid")
         + dot($"centroid", $"centroid"))
@@ -945,18 +1092,11 @@ object Similarity extends QueryPack {
   def ivfProbeStored(s: SparkSession, root: String, nprobe: Int = 3,
       k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val q = broadcast(s.read.parquet(s"$root/_query"))
-    val cells = s.read.parquet(s"$root/_cents").crossJoin(q)
-      .withColumn("qd2", dot($"qv", $"qv")
-        - lit(2.0) * dot($"qv", $"centroid")
-        + dot($"centroid", $"centroid"))
-      .orderBy($"qd2".asc, $"cell".asc).limit(nprobe)
-      .select($"cell").collect().map(_.getLong(0)).toSeq
+    val pick = ivfPickCells(s, root, nprobe)
     val base = ivfReadLive(s, s"$root/index")
-      .filter($"cell".isin(cells: _*))
+      .filter($"cell".isin(pick.cells: _*))
     excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .crossJoin(q)
-      .withColumn("cos", cosine(vec($"embedding"), $"qv"))
+      .withColumn("cos", cosine(vec($"embedding"), pick.qv))
       .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
       .orderBy(round($"cos", 6).desc, $"vec_id".asc)
       .limit(k)
@@ -985,14 +1125,9 @@ object Similarity extends QueryPack {
   def ivfDeadByCell(s: SparkSession, path: String): DataFrame = {
     import s.implicits._
     val base = ivfRead(s, path)
-    val tombPath = s"$path/_tombstones"
-    val flagged =
-      if (!graft.core.Fs.exists(s, tombPath))
-        base.withColumn("is_dead", lit(0L))
-      else base.join(
-        broadcast(s.read.parquet(tombPath).distinct()
-          .withColumn("is_dead", lit(1L))),
-        Seq("vec_id"), "left")
+    val flagged = ivfTombstones(s, path).fold(
+        base.withColumn("is_dead", lit(0L)))(t => base.join(
+      broadcast(t.withColumn("is_dead", lit(1L))), Seq("vec_id"), "left"))
     flagged
       .groupBy($"cell")
       .agg(count(lit(1)).as("n_total"),
@@ -1042,10 +1177,8 @@ object Similarity extends QueryPack {
     */
   def ivfReadLiveTenants(s: SparkSession, path: String): DataFrame = {
     val idx = ivfReadTenants(s, path)
-    if (!graft.core.Fs.exists(s, s"$path/_tombstones")) idx
-    else idx.join(
-      broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
-      Seq("vec_id"), "left_anti")
+    ivfTombstones(s, path).fold(idx)(t =>
+      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
   }
 
   /** Build the multi-tenant serving root: ONE corpus-wide quantizer
@@ -1062,14 +1195,11 @@ object Similarity extends QueryPack {
       k: Int = 8, iters: Int = 2): Unit = {
     import s.implicits._
     val emb = embCached(s, dir)
-    val (_, cents) = ivfLearned(emb, k, iters)
-    val idx = kmeansAssign(emb,
-        cents.select($"cell".as("cl"), $"centroid".as("cvec")))
-      .select($"vec_id", $"embedding",
-        $"label".cast("long").as("tb"), $"cl".as("cell"))
+    val q = ivfTrain(emb, k, iters)
+    val idx = ivfAssign(emb, q, $"label".cast("long").as("tb"))
     graft.core.Par.all(s, Seq(
       () => ivfWriteTenants(idx, s"$root/index"),
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
         .write.mode("overwrite").parquet(s"$root/_query")))
@@ -1087,18 +1217,11 @@ object Similarity extends QueryPack {
       nprobe: Int = 3, k: Int = 10,
       excludeVecId: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val q = broadcast(s.read.parquet(s"$root/_query"))
-    val cells = s.read.parquet(s"$root/_cents").crossJoin(q)
-      .withColumn("qd2", dot($"qv", $"qv")
-        - lit(2.0) * dot($"qv", $"centroid")
-        + dot($"centroid", $"centroid"))
-      .orderBy($"qd2".asc, $"cell".asc).limit(nprobe)
-      .select($"cell").collect().map(_.getLong(0)).toSeq
+    val pick = ivfPickCells(s, root, nprobe)
     val base = ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb && $"cell".isin(cells: _*))
+      .filter($"tb" === tb && $"cell".isin(pick.cells: _*))
     excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .crossJoin(q)
-      .withColumn("cos", cosine(vec($"embedding"), $"qv"))
+      .withColumn("cos", cosine(vec($"embedding"), pick.qv))
       .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
       .orderBy(round($"cos", 6).desc, $"vec_id".asc)
       .limit(k)
@@ -1211,9 +1334,9 @@ object Similarity extends QueryPack {
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     val emb = embCached(s, dir)
-    val (_, cents) = ivfLearned(emb, k = 8, iters = 2)
+    val q = ivfTrain(emb, k = 8, iters = 2)
     graft.core.Par.all(s, Seq(
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
         .write.mode("overwrite").parquet(s"$root/_query")))
@@ -1247,21 +1370,30 @@ object Similarity extends QueryPack {
     * Exactness: codes are q109's (round(v/scale) ∈ [−127,127] — a
     * parquet BYTE holds them losslessly, and byte→double dequantizes
     * to the same bits as q136's long→double).
+    *
+    * Job shape: the quantizer trains once ([[ivfTrain]]: the seed
+    * rows, then one k-row aggregation per Lloyd update, collected to
+    * the driver), and the index is ONE projection over the embeddings
+    * computing both the cell (the centroid rows as a literal inside
+    * `nearest_centroid`) and the int8 codes — no join, no broadcast,
+    * no re-training per write. The three writes (index, `_cents`,
+    * `_query`) stay [[graft.core.Par.all]] legs: run one after another,
+    * q193's build+probe measured 1.25–1.3× slower at 200–500 vectors.
     */
   def ivfServingSetupSq8(s: SparkSession, dir: String, root: String,
       k: Int = 8, iters: Int = 2,
-      centsPre: Option[DataFrame] = None): Unit = {
+      centsPre: Option[Quantizer] = None): Unit = {
     import s.implicits._
     val emb = embCached(s, dir)
-    val (idx, cents) = ivfLearnedOr(emb, k, iters, centsPre)
+    val q = centsPre.getOrElse(ivfTrain(emb, k, iters))
     graft.core.Par.all(s, Seq(
-      () => idx.select($"vec_id", $"cell")
-        .join(quantizeInt8(emb).select($"vec_id", $"scale",
-          transform($"code", _.cast("byte")).as("code")), "vec_id")
-        .select($"vec_id", $"scale", $"code", $"cell")
+      () => quantizeInt8(emb)
+        .select($"vec_id", $"scale",
+          transform($"code", _.cast("byte")).as("code"),
+          q.cellOf($"v").as("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$root/index"),
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
         .write.mode("overwrite").parquet(s"$root/_query")))
@@ -1278,25 +1410,14 @@ object Similarity extends QueryPack {
   def ivfProbeStoredSq8(s: SparkSession, root: String, nprobe: Int = 3,
       k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val q = broadcast(s.read.parquet(s"$root/_query"))
-    val cells = s.read.parquet(s"$root/_cents").crossJoin(q)
-      .withColumn("qd2", dot($"qv", $"qv")
-        - lit(2.0) * dot($"qv", $"centroid")
-        + dot($"centroid", $"centroid"))
-      .orderBy($"qd2".asc, $"cell".asc).limit(nprobe)
-      .select($"cell").collect().map(_.getLong(0)).toSeq
-    val idx = s.read.parquet(s"$root/index")
-      .withColumn("cell", col("cell").cast("long"))
-      .filter($"cell".isin(cells: _*))
-    val live =
-      if (!graft.core.Fs.exists(s, s"$root/index/_tombstones")) idx
-      else idx.join(
-        broadcast(s.read.parquet(s"$root/index/_tombstones").distinct()),
-        Seq("vec_id"), "left_anti")
+    val pick = ivfPickCells(s, root, nprobe)
+    val idx = s.read.schema(Sq8IndexSchema).parquet(s"$root/index")
+      .filter($"cell".isin(pick.cells: _*))
+    val live = ivfTombstones(s, s"$root/index").fold(idx)(t =>
+      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
     excludeVecId.fold(live)(id => live.filter($"vec_id" =!= id))
-      .crossJoin(q)
       .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
-      .withColumn("cos", cosine($"deq", $"qv"))
+      .withColumn("cos", cosine($"deq", pick.qv))
       .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
       .orderBy(round($"cos", 6).desc, $"vec_id".asc)
       .limit(k)
@@ -1329,19 +1450,16 @@ object Similarity extends QueryPack {
       root: String, k: Int = 8, iters: Int = 2): Unit = {
     import s.implicits._
     val emb = embCached(s, dir)
-    val (_, cents) = ivfLearned(emb, k, iters)
+    val q = ivfTrain(emb, k, iters)
     graft.core.Par.all(s, Seq(
-      () => kmeansAssign(emb,
-          cents.select($"cell".as("cl"), $"centroid".as("cvec")))
-        .select($"vec_id", $"label".cast("long").as("tb"),
-          $"cl".as("cell"))
-        .join(quantizeInt8(emb).select($"vec_id", $"scale",
-          transform($"code", _.cast("byte")).as("code")), "vec_id")
-        .select($"vec_id", $"scale", $"code", $"tb", $"cell")
+      () => quantizeInt8(emb)
+        .select($"vec_id", $"scale",
+          transform($"code", _.cast("byte")).as("code"),
+          $"label".cast("long").as("tb"), q.cellOf($"v").as("cell"))
         .transform(byParts(_, "tb", "cell"))
         .write.mode("overwrite").partitionBy("tb", "cell")
         .parquet(s"$root/index"),
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => emb.filter($"vec_id" === 0)
         .select(vec($"embedding").as("qv"))
         .write.mode("overwrite").parquet(s"$root/_query")))
@@ -1356,19 +1474,12 @@ object Similarity extends QueryPack {
       nprobe: Int = 3, k: Int = 10,
       excludeVecId: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val q = broadcast(s.read.parquet(s"$root/_query"))
-    val cells = s.read.parquet(s"$root/_cents").crossJoin(q)
-      .withColumn("qd2", dot($"qv", $"qv")
-        - lit(2.0) * dot($"qv", $"centroid")
-        + dot($"centroid", $"centroid"))
-      .orderBy($"qd2".asc, $"cell".asc).limit(nprobe)
-      .select($"cell").collect().map(_.getLong(0)).toSeq
+    val pick = ivfPickCells(s, root, nprobe)
     val base = ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb && $"cell".isin(cells: _*))
+      .filter($"tb" === tb && $"cell".isin(pick.cells: _*))
     excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .crossJoin(q)
       .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
-      .withColumn("cos", cosine($"deq", $"qv"))
+      .withColumn("cos", cosine($"deq", pick.qv))
       .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
       .orderBy(round($"cos", 6).desc, $"vec_id".asc)
       .limit(k)
@@ -1594,10 +1705,10 @@ object Similarity extends QueryPack {
       emb.agg(floor(max($"vec_id") / 2).cast("long").as("split")))
     val base = emb.crossJoin(half).filter($"vec_id" <= $"split")
       .select($"vec_id", $"embedding")
-    val (_, cents) = ivfLearned(base, k = 8, iters = 2)
+    val q = ivfTrain(base, k = 8, iters = 2)
     // ONE assignment pass over both snapshots; the snapshot tag is
     // recovered from vec_id, so the census is a single k-row aggregation
-    val counts = ivfAssignNew(emb, cents)
+    val counts = ivfAssign(emb, q)
       .crossJoin(half)
       .select($"cell",
         when($"vec_id" <= $"split", 1L).otherwise(0L).as("in_a"))
@@ -1743,13 +1854,9 @@ object Similarity extends QueryPack {
     // times produced three bit-identical centroid tables for 3× the
     // cost. Sharing changes no stored byte.
     val emb = embCached(s, dir)
-    val cent00 = emb.filter($"vec_id".between(1L, 8L))
-      .select($"vec_id".as("cl"), vec($"embedding").as("cvec"))
-    val centsShared = kmeansUpdate(kmeansAssign(emb, cent00))
-      .localCheckpoint()
-      .select($"cl".as("cell"), $"cvec".as("centroid"))
-    // the three setups are INDEPENDENT given the shared (eagerly
-    // checkpointed) centroids and the memoized emb frame — overlap
+    val centsShared = ivfTrain(emb, k = 8, iters = 2)
+    // the three setups are INDEPENDENT given the shared (driver-side)
+    // centroids and the memoized emb frame — overlap
     // them so one build's driver-side commit gaps back-fill with
     // another's tasks instead of serializing three write pipelines
     graft.core.Par.all(s, Seq(
@@ -1770,8 +1877,9 @@ object Similarity extends QueryPack {
     // each layout's cell ranking off its OWN sidecars; qv rides the
     // k-row frame so `_query` scans once per layout (scan-count gate)
     def prkOf(root: String): DataFrame =
-      broadcast(s.read.parquet(s"$root/_cents")
-        .crossJoin(broadcast(s.read.parquet(s"$root/_query")))
+      broadcast(graft.core.Fs.readSidecar(s, s"$root/_cents", CentsSchema)
+        .crossJoin(broadcast(
+          graft.core.Fs.readSidecar(s, s"$root/_query", QuerySchema)))
         .withColumn("qd2", dot($"qv", $"qv")
           - lit(2.0) * dot($"qv", $"centroid")
           + dot($"centroid", $"centroid"))
@@ -1816,7 +1924,8 @@ object Similarity extends QueryPack {
     val mSlice = slice($"qres", $"m" * PqSubDim + 1, lit(PqSubDim))
     val tabsP = broadcast(pp
       .withColumn("qres", zip_with($"qv", $"centroid", (a, c) => a - c))
-      .crossJoin(s.read.parquet(s"${base}p/_books"))
+      .crossJoin(
+        graft.core.Fs.readSidecar(s, s"${base}p/_books", BooksSchema))
       .select($"cell", $"prk",
         ($"m".cast("long") * lit(1000L) + $"cl").as("mk"),
         (dot(mSlice, mSlice)
@@ -1919,9 +2028,9 @@ object Similarity extends QueryPack {
       .select($"vec_id", $"embedding")
     val delta = emb.crossJoin(half).filter($"vec_id" > $"split")
       .select($"vec_id", $"embedding")
-    val (idx, cents) = ivfLearned(base, k = 8, iters = 2)
-    val appended = ivfAssignNew(delta, cents)
-    idx.select($"vec_id", $"cell").withColumn("is_base", lit(1L))
+    val q = ivfTrain(base, k = 8, iters = 2)
+    val appended = ivfAssign(delta, q)
+    ivfAssign(base, q).select($"vec_id", $"cell").withColumn("is_base", lit(1L))
       .unionByName(appended.select($"vec_id", $"cell")
         .withColumn("is_base", lit(0L)))
       .groupBy($"cell")
@@ -2115,24 +2224,15 @@ object Similarity extends QueryPack {
     import s.implicits._
     val emb = embCached(s, dir)
     val SubDim = PqSubDim
-    // q128's trajectory inlined so the trained centroids can be
-    // lineage-truncated: cents/books/withRes each feed 4-5 downstream
-    // branches, and without checkpoints every branch re-executes the
-    // whole coarse training (measured 18 s at gsf10 → ~7 s with them —
-    // the q51-loop rule applied to a DAG instead of a loop; on a
-    // cluster, checkpoint(dir) is the executor-loss-safe spelling)
-    val cent0 = emb.filter($"vec_id".between(1L, 8L))
-      .select($"vec_id".as("cl"), vec($"embedding").as("cvec"))
-    val centsK = kmeansUpdate(kmeansAssign(emb, cent0)).localCheckpoint()
-    val idx = kmeansAssign(emb, centsK)
-      .select($"vec_id", $"embedding", $"cl".as("cell"))
-    val cents = centsK.select($"cl".as("cell"), $"cvec".as("centroid"))
-    val withRes = idx
-      .join(broadcast(cents), "cell")
-      .withColumn("res",
-        zip_with(vec($"embedding"), $"centroid", (a, c) => a - c))
-      .select($"vec_id", $"cell", $"res")
-      .localCheckpoint()
+    // q128's trajectory, trained once on the driver (ivfTrain): the
+    // centroids are literal rows, so no downstream branch re-runs the
+    // coarse training; withRes/booksAll feed 4-5 branches each and are
+    // checkpointed (the q51-loop rule applied to a DAG; on a cluster,
+    // checkpoint(dir) is the executor-loss-safe spelling)
+    val coarse = ivfTrain(emb, k = 8, iters = 2)
+    val cents = coarse.frame(s)
+    val withRes =
+      pqResiduals(ivfAssign(emb, coarse), coarse).localCheckpoint()
     // one exploded pass trains all four residual codebooks
     // (pqTrainBooks — r17; was four independent chains, each its own
     // aggregation + eager checkpoint)
@@ -2200,16 +2300,16 @@ object Similarity extends QueryPack {
     * codebook rows; the write is the ivfWrite partition layout.
     */
   /** Residuals of an assigned frame against its cells' centroids —
-    * (vec_id, cell, res) from (vec_id, embedding, cell) × (cell,
-    * centroid). One broadcast join + a zero-shuffle projection.
+    * (vec_id, cell, res) from (vec_id, embedding, cell): one
+    * projection, each row's centroid looked up in the quantizer's
+    * rows (a literal map, k entries).
     */
-  private def pqResiduals(asg: DataFrame, cents: DataFrame,
+  private def pqResiduals(asg: DataFrame, q: Quantizer,
       extra: Seq[String] = Nil): DataFrame = {
     import asg.sparkSession.implicits._
-    asg.join(broadcast(cents), "cell")
-      .withColumn("res",
-        zip_with(vec($"embedding"), $"centroid", (a, c) => a - c))
-      .select(($"vec_id" +: $"cell" +: $"res" +: extra.map(col)): _*)
+    asg.select(($"vec_id" +: $"cell" +:
+      zip_with(vec($"embedding"), element_at(map_from_entries(q.packed),
+        $"cell"), (a, c) => a - c).as("res") +: extra.map(col)): _*)
   }
 
   /** Train `mSub` subspace codebooks (k codewords of `subDim` dims
@@ -2287,7 +2387,7 @@ object Similarity extends QueryPack {
     */
   def ivfServingSetupPq(s: SparkSession, dir: String, root: String,
       memberFilter: Column = lit(true),
-      centsPre: Option[DataFrame] = None): Unit =
+      centsPre: Option[Quantizer] = None): Unit =
     ivfBuildPq(s, dir, root, withTenants = false, memberFilter, centsPre)
 
   /** The one PQ layout builder BOTH setups thread through (r16 advice:
@@ -2296,29 +2396,19 @@ object Similarity extends QueryPack {
     * coarse quantizer + four residual codebooks, encode the member
     * rows, write index + `_cents`/`_books`/`_query` sidecars. The
     * tenant form carries `tb` (from `label`) through residuals/encode
-    * via their `extra` parameter — exactly how ivfAssignNewTenants
-    * extends ivfAssignNew — and partitions two-level `(tb, cell)`.
+    * via their `extra` parameter — exactly how [[ivfAssign]] carries
+    * it — and partitions two-level `(tb, cell)`.
     */
   private def ivfBuildPq(s: SparkSession, dir: String, root: String,
       withTenants: Boolean, memberFilter: Column = lit(true),
-      centsPre: Option[DataFrame] = None): Unit = {
+      centsPre: Option[Quantizer] = None): Unit = {
     import s.implicits._
     val extra = if (withTenants) Seq("tb") else Nil
     val emb = embCached(s, dir)
-    val centsK = centsPre match {
-      case Some(c) => c.select($"cell".as("cl"), $"centroid".as("cvec"))
-      case None =>
-        val cent0 = emb.filter($"vec_id".between(1L, 8L))
-          .select($"vec_id".as("cl"), vec($"embedding").as("cvec"))
-        kmeansUpdate(kmeansAssign(emb, cent0)).localCheckpoint()
-    }
-    val asg = kmeansAssign(emb, centsK)
-    val idx =
-      if (withTenants) asg.select($"vec_id", $"embedding",
-        $"label".cast("long").as("tb"), $"cl".as("cell"))
-      else asg.select($"vec_id", $"embedding", $"cl".as("cell"))
-    val cents = centsK.select($"cl".as("cell"), $"cvec".as("centroid"))
-    val withRes = pqResiduals(idx, cents, extra).localCheckpoint()
+    val q = centsPre.getOrElse(ivfTrain(emb, k = 8, iters = 2))
+    val idx = ivfAssign(emb, q,
+      (if (withTenants) Seq($"label".cast("long").as("tb")) else Nil): _*)
+    val withRes = pqResiduals(idx, q, extra).localCheckpoint()
     // ONE exploded-subspace pass trains all four codebooks (r17 — was
     // four chains, each its own aggregation + eager checkpoint)
     val booksAll = pqTrainBooks(withRes).localCheckpoint()
@@ -2332,7 +2422,7 @@ object Similarity extends QueryPack {
           if (withTenants) byParts(d, extra :+ "cell": _*) else d)
         .write.mode("overwrite").partitionBy(extra :+ "cell": _*)
         .parquet(s"$root/index"),
-      () => cents.write.mode("overwrite").parquet(s"$root/_cents"),
+      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
       () => booksAll.select($"m", $"cl", $"cvec")
         .write.mode("overwrite").parquet(s"$root/_books"),
       () => emb.filter($"vec_id" === 0)
@@ -2357,9 +2447,10 @@ object Similarity extends QueryPack {
       .write.mode("append").partitionBy("cell").parquet(s"$root/index")
 
   /** Assign + encode NEW vectors against the layout's FROZEN
-    * quantizers — (vec_id, code, cell) from (vec_id, embedding): one
-    * broadcast of the k-row `_cents` + four ≤16-row `_books` packs,
-    * one zero-shuffle projection. The pure per-row kernel both the
+    * quantizers — (vec_id, code, cell) from (vec_id, embedding): the
+    * k `_cents` rows collected to the driver (a literal) and one
+    * broadcast of the four ≤16-row `_books` packs, one zero-shuffle
+    * projection. The pure per-row kernel both the
     * batch append ([[ivfAppendPq]]) and the streaming CRUD leg
     * ([[graft.streaming.IvfMaintain.applyBatchPq]]) write — shared so
     * a stored code is byte-identical whichever path landed it.
@@ -2367,11 +2458,11 @@ object Similarity extends QueryPack {
   private[graft] def ivfAssignEncodePq(s: SparkSession, newEmb: DataFrame,
       root: String): DataFrame = {
     import s.implicits._
-    val cents = s.read.parquet(s"$root/_cents")
-    val booksAll = s.read.parquet(s"$root/_books")
+    val q = ivfQuantizer(s, root)
+    val booksAll = graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema)
     val books = (0 until PqM).map(m =>
       booksAll.filter($"m" === m).select($"cl", $"cvec"))
-    pqEncode(pqResiduals(ivfAssignNew(newEmb, cents), cents), books)
+    pqEncode(pqResiduals(ivfAssign(newEmb, q), q), books)
   }
 
   // --- q201: multi-tenant × stored-PQ IVF (the composition matrix closed) ----
@@ -2420,18 +2511,13 @@ object Similarity extends QueryPack {
   private def pqStoredProbeCtx(s: SparkSession, root: String,
       nprobe: Int): (Seq[Long], DataFrame) = {
     import s.implicits._
-    val q = broadcast(s.read.parquet(s"$root/_query"))
-    val cellsDf = s.read.parquet(s"$root/_cents").crossJoin(q)
-      .withColumn("qd2", dot($"qv", $"qv")
-        - lit(2.0) * dot($"qv", $"centroid")
-        + dot($"centroid", $"centroid"))
-      .orderBy($"qd2".asc, $"cell".asc).limit(nprobe)
-      .select($"cell", $"centroid", $"qv")
-    val cells = cellsDf.select($"cell").collect().map(_.getLong(0)).toSeq
+    val pick = ivfPickCells(s, root, nprobe)
     val mSlice = slice($"qres", $"m" * PqSubDim + 1, lit(PqSubDim))
-    val tabs = broadcast(cellsDf
+    val tabs = broadcast(s.createDataFrame(
+        java.util.Arrays.asList(pick.picked: _*), CentsSchema)
+      .select($"cell", $"centroid", pick.qv.as("qv"))
       .withColumn("qres", zip_with($"qv", $"centroid", (a, c) => a - c))
-      .crossJoin(s.read.parquet(s"$root/_books"))
+      .crossJoin(graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema))
       .select($"cell",
         ($"m".cast("long") * lit(1000L) + $"cl").as("mk"),
         (dot(mSlice, mSlice)
@@ -2439,7 +2525,7 @@ object Similarity extends QueryPack {
           + dot($"cvec", $"cvec")).as("qd2"))
       .groupBy($"cell")
       .agg(map_from_entries(collect_list(struct($"mk", $"qd2"))).as("tab")))
-    (cells, tabs)
+    (pick.cells, tabs)
   }
 
   /** Rank stored-code candidates by the fixed-order 4-term ADC lookup
@@ -2571,14 +2657,10 @@ object Similarity extends QueryPack {
       k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
     import s.implicits._
     val (cells, tabs) = pqStoredProbeCtx(s, root, nprobe)
-    val idx = s.read.parquet(s"$root/index")
-      .withColumn("cell", col("cell").cast("long"))
+    val idx = s.read.schema(PqIndexSchema).parquet(s"$root/index")
       .filter($"cell".isin(cells: _*))
-    val live =
-      if (!graft.core.Fs.exists(s, s"$root/index/_tombstones")) idx
-      else idx.join(
-        broadcast(s.read.parquet(s"$root/index/_tombstones").distinct()),
-        Seq("vec_id"), "left_anti")
+    val live = ivfTombstones(s, s"$root/index").fold(idx)(t =>
+      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
     pqAdcRank(live, tabs, k, excludeVecId)
   }
 

@@ -2235,18 +2235,11 @@ object TextAnalysis extends QueryPack {
   def compactionCensus(s: SparkSession, bm25Path: String,
       ivfIndexPath: String, threshold: Double): DataFrame = {
     import s.implicits._
-    def leg(name: String, base: DataFrame, idCol: String): DataFrame = {
-      val tombPath = (if (name == "bm25") bm25Path else ivfIndexPath) +
-        "/_tombstones"
-      val dead =
-        if (!graft.core.Fs.exists(s, tombPath)) lit(0L)
-        else coalesce($"is_dead", lit(0L))
-      val flagged =
-        if (!graft.core.Fs.exists(s, tombPath)) base
-        else base.join(
-          broadcast(s.read.parquet(tombPath).distinct()
-            .withColumn("is_dead", lit(1L))),
-          Seq(idCol), "left")
+    def leg(name: String, base: DataFrame, idCol: String,
+        tombs: Option[DataFrame]): DataFrame = {
+      val dead = tombs.fold(lit(0L))(_ => coalesce($"is_dead", lit(0L)))
+      val flagged = tombs.fold(base)(t => base.join(
+        broadcast(t.withColumn("is_dead", lit(1L))), Seq(idCol), "left"))
       flagged
         .agg(count(lit(1)).as("n_total"), sum(dead).as("n_dead"))
         .select(lit(name).as("layout"), $"n_total", $"n_dead",
@@ -2256,8 +2249,12 @@ object TextAnalysis extends QueryPack {
         .withColumn("compact_now",
           when($"dead_frac" >= threshold, 1L).otherwise(0L))
     }
-    leg("bm25", s.read.parquet(bm25Path), "doc_id")
-      .unionByName(leg("ivf", s.read.parquet(ivfIndexPath), "vec_id"))
+    val bm25Tombs = s"$bm25Path/_tombstones"
+    leg("bm25", s.read.parquet(bm25Path), "doc_id",
+        if (!graft.core.Fs.exists(s, bm25Tombs)) None
+        else Some(s.read.parquet(bm25Tombs).distinct()))
+      .unionByName(leg("ivf", s.read.parquet(ivfIndexPath), "vec_id",
+        Similarity.ivfTombstones(s, ivfIndexPath)))
       .orderBy($"layout".asc)
   }
 

@@ -51,14 +51,18 @@ object Compaction {
     * Scale design: per-leaf file counts come from the FS listing (ON-
     * DISK bytes — driver metadata only, no compression-ratio guess),
     * and each leaf compacts with `coalesce` — no shuffle, rows stream
-    * scan→write. Leaves run as concurrent Spark jobs (`parallelism`
-    * at a time), so a 2,000-partition index doesn't serialize into
-    * 2,000 sequential jobs; only the FS walk is driver-side.
+    * scan→write. Leaves run as concurrent Spark jobs through
+    * [[graft.core.Par.all]] (one per core at a time; this was a fixed
+    * 8 before, and the change is not measured), so a 2,000-partition
+    * index doesn't serialize into 2,000 sequential jobs. A failed leaf
+    * cancels its siblings' jobs and the call returns once every leaf's
+    * driver thread has ended; a killed write task can outlive the
+    * call until it notices the kill. Only the FS walk is driver-side.
     *
     * Returns (relative partition path, target file count) per leaf.
     */
   def compactPartitioned(spark: SparkSession, in: String, out: String,
-      targetMB: Int = 256, parallelism: Int = 8): Seq[(String, Int)] = {
+      targetMB: Int = 256): Seq[(String, Int)] = {
     val inPath = new Path(in)
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.getFileStatus(inPath).getPath // normalized/qualified
@@ -74,21 +78,10 @@ object Compaction {
       val rel = dir.toString.stripPrefix(root.toString).stripPrefix("/")
       rel -> math.max(1, ((bytes + target - 1) / target).toInt)
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, parallelism))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val jobs = plan.map { case (rel, nf) =>
-        scala.concurrent.Future {
-          spark.read.parquet(s"$in/$rel").coalesce(nf)
-            .write.mode("overwrite").parquet(s"$out/$rel")
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(jobs),
-        scala.concurrent.duration.Duration.Inf): Unit
-    } finally pool.shutdown()
+    graft.core.Par.all(spark, plan.map { case (rel, nf) => () =>
+      spark.read.parquet(s"$in/$rel").coalesce(nf)
+        .write.mode("overwrite").parquet(s"$out/$rel")
+    })
     plan
   }
 }

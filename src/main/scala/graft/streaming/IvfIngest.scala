@@ -48,7 +48,7 @@ object IvfIngest {
     val s = batch.sparkSession
     IngestCommit.applyStaged(s, index(root), batchId, Artifacts, staged =>
       graft.operators.Similarity
-        .ivfAssignNew(batch, s.read.parquet(s"$root/_cents"))
+        .ivfAssign(batch, graft.operators.Similarity.ivfQuantizer(s, root))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$staged/post"))
   }

@@ -46,9 +46,9 @@ object IvfMaintain {
     val b = batch.localCheckpoint(false)
     IngestCommit.applyStaged(s, index(root), batchId, Artifacts, staged => {
       graft.operators.Similarity
-        .ivfAssignNew(
+        .ivfAssign(
           b.filter(col("op") === "add").select("vec_id", "embedding"),
-          s.read.parquet(s"$root/_cents"))
+          graft.operators.Similarity.ivfQuantizer(s, root))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$staged/post")
       b.filter(col("op") === "del")
@@ -74,7 +74,7 @@ object IvfMaintain {
     * the tenant layouts previously had no streaming CRUD leg, forcing
     * batch-side rebuilds): one (op, vec_id, embedding, tb) micro-batch
     * where adds carry their tenant tag through the assignment
-    * projection ([[graft.operators.Similarity.ivfAssignNewTenants]])
+    * projection ([[graft.operators.Similarity.ivfAssign]]'s `extra`)
     * and stage `partitionBy(tb, cell)` — published files land only
     * under the batch's own (tenant, cell) dirs, so co-tenants' files
     * are never rewritten by a neighbor's ingest. Dels are vec_id
@@ -94,11 +94,10 @@ object IvfMaintain {
       // (tenant, cell)) — measured 1.45 s per q198 micro-batch at
       // sf0.1; distributed it is one file per dir, created in parallel
       graft.operators.Similarity.byParts(
-        graft.operators.Similarity.ivfAssignNewTenants(
-          b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding"),
-              col("tb").cast("long").as("tb")),
-          s.read.parquet(s"$root/_cents")), "tb", "cell")
+        graft.operators.Similarity.ivfAssign(
+          b.filter(col("op") === "add"),
+          graft.operators.Similarity.ivfQuantizer(s, root),
+          col("tb").cast("long").as("tb")), "tb", "cell")
         .write.mode("overwrite").partitionBy("tb", "cell")
         .parquet(s"$staged/post")
       b.filter(col("op") === "del")
@@ -171,11 +170,11 @@ object IvfMaintain {
     * [[graft.operators.Similarity.ivfDeadByCell]] / q172's census.
     */
   def deadVecFrac(s: SparkSession, root: String): Double = {
-    val tombPath = s"${index(root)}/_tombstones"
-    if (!graft.core.Fs.exists(s, tombPath)) return 0.0
-    val dead = s.read.parquet(tombPath).distinct().count()
-    val total = s.read.parquet(index(root)).count()
-    if (total == 0L) 0.0 else dead.toDouble / total.toDouble
+    graft.operators.Similarity.ivfTombstones(s, index(root)).fold(0.0) { t =>
+      val dead = t.count()
+      val total = s.read.parquet(index(root)).count()
+      if (total == 0L) 0.0 else dead.toDouble / total.toDouble
+    }
   }
 
   /** Compact the CURRENT generation into the next and swap, carrying
@@ -214,9 +213,9 @@ object IvfMaintain {
     compact(s"$base/$curGen/index", s"$base/$next/index")
     // `_books` rides along for PQ generations: codebooks are frozen
     // exactly like centroids (re-deriving them would be a retrain)
-    Seq("_cents", "_query", "_queries", "_books").foreach { side =>
+    graft.operators.Similarity.SidecarSchemas.foreach { case (side, schema) =>
       if (graft.core.Fs.exists(s, s"$base/$curGen/$side"))
-        s.read.parquet(s"$base/$curGen/$side")
+        graft.core.Fs.readSidecar(s, s"$base/$curGen/$side", schema)
           .write.mode("overwrite").parquet(s"$base/$next/$side")
     }
     val committed = IngestCommit.committed(s, s"$base/$curGen/index")
