@@ -15,11 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * retrieval):
   *
   *   1. setup (untimed): [[graft.operators.TextAnalysis.bm25IndexWrite]]
-  *      and [[graft.operators.Similarity.ivfServingSetup]] persist the
-  *      two layouts into a scratch root;
+  *      and [[graft.operators.Similarity.IvfLayout.build]] persist the
+  *      BM25 and the six stored IVF layouts into a scratch root;
   *   2. measured: min-of-REPS over the probe-only paths
   *      ([[graft.operators.TextAnalysis.bm25Probe]] /
-  *      [[graft.operators.Similarity.ivfProbeStored]]), through
+  *      [[graft.operators.Similarity.IvfLayout.probe]]), through
   *      Bench.runScoped (noop sink, cache-scoped); the in-query
   *      build+probe forms (q160, q128) run on the same session for the
   *      build-share baseline;
@@ -94,63 +94,38 @@ object ServingBench {
     // setup, untimed (but reported: the build share a deployment
     // amortizes across every query)
     val bm25Root = s"$out/bm25"
-    val ivfRoot = s"$out/ivf"
+    val tenantRoot = s"$out/bm25_tenants"
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     val buildBm25 = timed(TextAnalysis.bm25IndexWrite(
       graft.core.Tables.documents(spark, sfDir), bm25Root))
-    val buildIvf = timed(Similarity.ivfServingSetup(spark, sfDir, ivfRoot))
-    val tenantRoot = s"$out/bm25_tenants"
     val buildTenants = timed(TextAnalysis.bm25IndexWriteTenants(
       graft.core.Tables.documents(spark, sfDir), tenantRoot))
-    // compressed-at-rest layout: same quantizer, 1-byte codes on disk —
-    // the bytes_read shrink is THE claim this bench exists to measure
-    val sq8Root = s"$out/ivf_sq8"
-    val buildSq8 = timed(Similarity.ivfServingSetupSq8(spark, sfDir, sq8Root))
-    val ivfTenRoot = s"$out/ivf_tenants"
-    val buildIvfTen = timed(
-      Similarity.ivfServingSetupTenants(spark, sfDir, ivfTenRoot))
-    val tenSq8Root = s"$out/ivf_tsq8"
-    val buildTenSq8 = timed(
-      Similarity.ivfServingSetupTenantsSq8(spark, sfDir, tenSq8Root))
-    // stored product quantization: 4-byte codes at rest — the step
-    // past SQ8's 4x cut (r15 verdict #3); same probed-cell file count,
-    // far fewer bytes
-    val pqRoot = s"$out/ivf_pq"
-    val buildPq = timed(Similarity.ivfServingSetupPq(spark, sfDir, pqRoot))
-    // the full composition: tenant pruning x 4-byte codes
-    val tenPqRoot = s"$out/ivf_tpq"
-    val buildTenPq = timed(
-      Similarity.ivfServingSetupTenantsPq(spark, sfDir, tenPqRoot))
+    // the six stored IVF layouts: one quantizer rule, the index bytes
+    // shrinking from full precision to 1-byte SQ8 codes to 4-byte PQ
+    // codes at the same probed-cell file count, tenant layouts pruning
+    // two levels — the bytes_read shrink is THE claim measured here
+    val ivf = Similarity.IvfLayout.all.map { l =>
+      val root = s"$out/${l.name}"
+      (l, root, timed(l.build(spark, sfDir, root)))
+    }
+    def ivfProbe(l: Similarity.IvfLayout, root: String): DataFrame =
+      l.probe(spark, root, Option.when(l.tenants)(Similarity.IvfTenants.head),
+        excludeVecId = Some(0L))
 
     val queries: Seq[(String, () => DataFrame)] = Seq(
       "bm25_probe_only" -> (() =>
         TextAnalysis.bm25Probe(spark, bm25Root, TextAnalysis.Bm25Query)),
       "bm25_batch_probe_only" -> (() =>
         TextAnalysis.bm25ProbeBatch(spark, bm25Root, TextAnalysis.Bm25Batch)),
-      "ivf_probe_only" -> (() =>
-        Similarity.ivfProbeStored(spark, ivfRoot, excludeVecId = Some(0L))),
-      "ivf_batch_probe_only" -> (() =>
-        Similarity.ivfProbeStoredBatch(spark, ivfRoot)),
       "bm25_tenant_probe_only" -> (() =>
         TextAnalysis.bm25ProbeTenant(spark, tenantRoot, "en",
           TextAnalysis.Bm25Query)),
-      "ivf_sq8_probe_only" -> (() =>
-        Similarity.ivfProbeStoredSq8(spark, sq8Root,
-          excludeVecId = Some(0L))),
-      "ivf_tenant_probe_only" -> (() =>
-        Similarity.ivfProbeStoredTenant(spark, ivfTenRoot,
-          Similarity.IvfTenants.head, excludeVecId = Some(0L))),
-      "ivf_tenant_sq8_probe_only" -> (() =>
-        Similarity.ivfProbeStoredTenantSq8(spark, tenSq8Root,
-          Similarity.IvfTenants.head, excludeVecId = Some(0L))),
-      "ivf_pq_probe_only" -> (() =>
-        Similarity.ivfProbeStoredPq(spark, pqRoot,
-          excludeVecId = Some(0L))),
-      "ivf_tenant_pq_probe_only" -> (() =>
-        Similarity.ivfProbeStoredTenantPq(spark, tenPqRoot,
-          Similarity.IvfTenants.head, excludeVecId = Some(0L))),
+      "ivf_batch_probe_only" -> (() =>
+        Similarity.ivfProbeStoredBatch(spark, ivf.head._2))) ++
+      ivf.map { case (l, root, _) =>
+        s"${l.name}_probe_only" -> (() => ivfProbe(l, root)) } ++ Seq(
       "inquery_q160_bm25" -> (() =>
         TextAnalysis.q160Bm25Probe(spark, sfDir)),
       "inquery_q128_ivf" -> (() =>
@@ -174,72 +149,40 @@ object ServingBench {
     // RDD in the probe's own executed plan and hides the metrics
     // (round-13 advice); the pre-checkpoint frame IS the plan the
     // checkpoint materializes, so its scan stats are the probe's.
-    def pruned(df: DataFrame, root: String): (Long, Long) = {
-      df.collect(); scanStats(df, root)
+    // Every IVF probe reads the same probed-cell file count as the
+    // full-precision one at a fraction of its bytes; a tenant probe
+    // reads only its own tb= dir's probed cells.
+    def pruned(name: String, df: DataFrame, root: String,
+        sub: String): String = {
+      df.collect()
+      val (f, b) = scanStats(df, sub)
+      val (tf, tb) = layoutTotals(root)
+      s""""$name":{"files_read":$f,"files_total":$tf,""" +
+        s""""bytes_read":$b,"bytes_total":$tb}"""
     }
-    val (bmFiles, bmBytes) = pruned(
-      TextAnalysis.bm25LivePostings(spark, bm25Root, TextAnalysis.Bm25Query),
-      "bm25")
-    val (ivFiles, ivBytes) = pruned(
-      queries.find(_._1 == "ivf_probe_only").get._2(), "ivf/index")
-    // tenant pruning: the en probe must read only en-dir bucket files —
-    // the two-level claim as a measured number against the SHARED
-    // multi-tenant layout's totals
-    val (tnFiles, tnBytes) = pruned(
-      TextAnalysis.bm25TenantPostings(spark, tenantRoot, "en",
-        TextAnalysis.Bm25Query), "bm25_tenants")
-    // sq8: same probed-cell file COUNT as full-precision, ~4x fewer
-    // BYTES — compression changes the wire cost, never the pruning
-    val (sqFiles, sqBytes) = pruned(
-      queries.find(_._1 == "ivf_sq8_probe_only").get._2(), "ivf_sq8/index")
-    // dense tenant: two-level (tb, cell) pruning as measured numbers
-    val (itFiles, itBytes) = pruned(
-      queries.find(_._1 == "ivf_tenant_probe_only").get._2(),
-      "ivf_tenants/index")
-    // composed layout: tenant pruning AND the byte-code cut together
-    val (tsFiles, tsBytes) = pruned(
-      queries.find(_._1 == "ivf_tenant_sq8_probe_only").get._2(),
-      "ivf_tsq8/index")
-    // stored PQ: unchanged probed-cell file count, 4-byte member rows
-    val (pqFiles, pqBytes) = pruned(
-      queries.find(_._1 == "ivf_pq_probe_only").get._2(), "ivf_pq/index")
-    // tenant x PQ: two-level pruning AND the 4-byte cut together
-    val (tpFiles, tpBytes) = pruned(
-      queries.find(_._1 == "ivf_tenant_pq_probe_only").get._2(),
-      "ivf_tpq/index")
-    val (bmTotF, bmTotB) = layoutTotals(bm25Root)
-    val (ivTotF, ivTotB) = layoutTotals(s"$ivfRoot/index")
-    val (tnTotF, tnTotB) = layoutTotals(tenantRoot)
-    val (sqTotF, sqTotB) = layoutTotals(s"$sq8Root/index")
-    val (itTotF, itTotB) = layoutTotals(s"$ivfTenRoot/index")
-    val (tsTotF, tsTotB) = layoutTotals(s"$tenSq8Root/index")
-    val (pqTotF, pqTotB) = layoutTotals(s"$pqRoot/index")
-    val (tpTotF, tpTotB) = layoutTotals(s"$tenPqRoot/index")
+    val pruning = Seq(
+      pruned("bm25", TextAnalysis.bm25LivePostings(spark, bm25Root,
+        TextAnalysis.Bm25Query), bm25Root, "bm25"),
+      // tenant pruning: the en probe must read only en-dir bucket files
+      pruned("bm25_tenants", TextAnalysis.bm25TenantPostings(spark,
+        tenantRoot, "en", TextAnalysis.Bm25Query), tenantRoot,
+        "bm25_tenants")) ++
+      ivf.map { case (l, root, _) =>
+        pruned(l.name, ivfProbe(l, root), s"$root/index", s"${l.name}/index")
+      }
 
     val host = Bench.hostJson(loadBefore, Bench.loadAvg(),
       Runtime.getRuntime.availableProcessors)
     def r4(x: Double) =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
     val qs = timedQs.map { case (n, t) => s""""$n":${r4(t)}""" }.mkString(",")
+    val builds = (Seq("bm25_build" -> buildBm25,
+        "tenants_build" -> buildTenants) ++
+      ivf.map { case (l, _, t) => s"${l.name}_build" -> t })
+      .map { case (n, t) => s""""$n":${r4(t)}""" }.mkString(",")
     println(s"""{"metric":"serving_probe_only","unit":"sec","sf":"$sfDir",""" +
-      s""""reps":$reps,"queries":{$qs},""" +
-      s""""setup_sec":{"bm25_build":${r4(buildBm25)},"ivf_build":${r4(buildIvf)},"tenants_build":${r4(buildTenants)},"ivf_sq8_build":${r4(buildSq8)},"ivf_tenants_build":${r4(buildIvfTen)},"ivf_tenant_sq8_build":${r4(buildTenSq8)},"ivf_pq_build":${r4(buildPq)},"ivf_tenant_pq_build":${r4(buildTenPq)}},""" +
-      s""""pruning":{"bm25":{"files_read":$bmFiles,"files_total":$bmTotF,""" +
-      s""""bytes_read":$bmBytes,"bytes_total":$bmTotB},""" +
-      s""""ivf":{"files_read":$ivFiles,"files_total":$ivTotF,""" +
-      s""""bytes_read":$ivBytes,"bytes_total":$ivTotB},""" +
-      s""""ivf_sq8":{"files_read":$sqFiles,"files_total":$sqTotF,""" +
-      s""""bytes_read":$sqBytes,"bytes_total":$sqTotB},""" +
-      s""""ivf_tenants":{"files_read":$itFiles,"files_total":$itTotF,""" +
-      s""""bytes_read":$itBytes,"bytes_total":$itTotB},""" +
-      s""""ivf_tenant_sq8":{"files_read":$tsFiles,"files_total":$tsTotF,""" +
-      s""""bytes_read":$tsBytes,"bytes_total":$tsTotB},""" +
-      s""""ivf_pq":{"files_read":$pqFiles,"files_total":$pqTotF,""" +
-      s""""bytes_read":$pqBytes,"bytes_total":$pqTotB},""" +
-      s""""ivf_tenant_pq":{"files_read":$tpFiles,"files_total":$tpTotF,""" +
-      s""""bytes_read":$tpBytes,"bytes_total":$tpTotB},""" +
-      s""""bm25_tenants":{"files_read":$tnFiles,"files_total":$tnTotF,""" +
-      s""""bytes_read":$tnBytes,"bytes_total":$tnTotB}},"host":$host}""")
+      s""""reps":$reps,"queries":{$qs},"setup_sec":{$builds},""" +
+      s""""pruning":{${pruning.mkString(",")}},"host":$host}""")
     spark.stop()
   }
 }

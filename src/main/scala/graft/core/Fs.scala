@@ -76,6 +76,15 @@ object Fs {
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
+  /** Register `path` for recursive deletion when the JVM exits (an
+    * oracle row's temp layout root) and return it.
+    */
+  def deleteOnExit(s: SparkSession, path: String): String = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    path
+  }
+
   /** Whole-file UTF-8 read — the commit-pointer sidecars
     * (`_INGEST_COMMIT`, CDC `VERSION`) are a few bytes; routing them
     * through the path's own FileSystem is what makes the replay guard

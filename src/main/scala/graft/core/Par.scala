@@ -4,6 +4,7 @@ import java.util.UUID
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
   Executors, TimeUnit}
 
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.SparkSession
 
 /** Independent write pipelines run side by side: a serving setup's
@@ -32,11 +33,13 @@ object Par {
     * (`awaitTermination`). Then it rethrows that first failure. So no
     * leg's driver-side work (a rename, a job submission) is still
     * running when a caller's retry or cleanup starts on the same
-    * paths. The call waits for the legs, not for their Spark tasks: a
-    * leg blocked in a job returns as soon as it is interrupted, while
-    * the killed task may still be running on an executor until it
-    * notices the kill (ParSpec's job and compaction cases poll for
-    * it).
+    * paths. It also waits for the cancelled Spark work: a leg blocked
+    * in a job returns as soon as it is interrupted, while the killed
+    * task may run on an executor until it notices the kill, so the
+    * call returns only once no job carrying its tag is running and
+    * none of their stages has a task still running. A task that never
+    * checks its kill flag keeps the call waiting (Spark's task reaper
+    * is the bound for that).
     */
   def all(s: SparkSession, legs: Seq[() => Unit]): Unit = {
     val sc = s.sparkContext
@@ -52,10 +55,26 @@ object Par {
         sc.cancelJobsWithTag(tag, "a sibling leg failed")
         pool.shutdownNow()
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        awaitTagged(sc, tag)
         throw (t match {
           case e: ExecutionException => e.getCause
           case _ => t
         })
     } finally pool.shutdown()
+  }
+
+  /** Wait until no job tagged `tag` is running and no stage of theirs
+    * has an active task. The listener bus is drained first, so the
+    * status store has seen every job the legs submitted (a drain that
+    * times out must not mask the leg's failure; the poll still runs).
+    */
+  private def awaitTagged(sc: SparkContext, tag: String): Unit = {
+    scala.util.Try(org.apache.spark.sql.GraftGlue.drainListenerBus(sc))
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(tag).exists(id =>
+      st.getJobInfo(id).exists(j =>
+        j.status == JobExecutionStatus.RUNNING ||
+          j.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))))
+    while (running) Thread.sleep(10)
   }
 }

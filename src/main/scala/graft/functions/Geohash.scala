@@ -97,9 +97,6 @@ object Geohash {
     ((latLo + latHi) / 2, (lonLo + lonHi) / 2)
   }
 
-  def decodeLat(h: String): Double = decode(h)._1
-  def decodeLon(h: String): Double = decode(h)._2
-
   /** pygeohash geohash_approximate_distance: meters bucket for the
     * common-prefix length (capped at 10).
     */

@@ -823,11 +823,10 @@ object Similarity extends QueryPack {
       index.sparkSession.sparkContext.defaultParallelism,
       cols.map(col): _*)
 
-  /** The schemas the stored-IVF writers produce, declared by their
-    * readers ([[graft.core.Fs.readSidecar]] for the `_`-prefixed
-    * sidecars, `read.schema` for the compressed indexes), so no read
-    * of a stored layout runs a schema-inference job. Index partition
-    * columns are declared long, the type the build wrote.
+  /** The schemas the stored-IVF sidecar writers produce, declared by
+    * their reader ([[graft.core.Fs.readSidecar]]), so no read of a
+    * stored layout runs a schema-inference job (the index schema is
+    * [[IvfLayout.schema]]).
     */
   private[graft] val CentsSchema =
     StructType.fromDDL("cell BIGINT, centroid ARRAY<DOUBLE>")
@@ -839,10 +838,6 @@ object Similarity extends QueryPack {
     StructType.fromDDL("m INT, cl BIGINT, cvec ARRAY<DOUBLE>")
   private[graft] val TombSchema =
     StructType.fromDDL("vec_id BIGINT")
-  private val Sq8IndexSchema = StructType.fromDDL(
-    "vec_id BIGINT, scale DOUBLE, code ARRAY<TINYINT>, cell BIGINT")
-  private val PqIndexSchema = StructType.fromDDL(
-    "vec_id BIGINT, code ARRAY<TINYINT>, cell BIGINT")
 
   /** The sidecar schema of each carried IVF sidecar, by directory name. */
   private[graft] val SidecarSchemas = Map("_cents" -> CentsSchema,
@@ -928,122 +923,292 @@ object Similarity extends QueryPack {
     CellPick(picked, query.headOption)
   }
 
-  /** Persist a serving index `partitionBy("cell")` — the layout every
-    * IVF query in this pack documents: a probe of nprobe cells becomes
-    * a PARTITION-PRUNED scan reading only those cells' files
-    * (PipelineOpsSpec proves the pruning physically via the scanned
-    * file list, the q96/geo-index discipline).
-    */
-  def ivfWrite(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  def ivfRead(s: SparkSession, path: String): DataFrame =
-    // partition-dir inference types `cell` int32; restore the written
-    // index's long so read-back round-trips the schema (the cast sits
-    // ABOVE the scan — partition pruning on cell still applies)
-    s.read.parquet(path).withColumn("cell", col("cell").cast("long"))
-
-  /** Assign a NEW embedding batch to an EXISTING learned quantizer —
-    * the retrain-free half of incremental IVF maintenance: the exact
-    * [[kmeansAssign]] rule (bit-parity d2, smallest-cell ties) against
-    * frozen centroids, so a vector appended today lands in the same
-    * cell a full retrain-free rebuild would put it in. `cents` (k rows)
-    * is collected once and assigned against by [[ivfAssign]]: one
-    * zero-shuffle projection.
-    */
-  def ivfAssignNew(newEmb: DataFrame, cents: DataFrame): DataFrame =
-    ivfAssign(newEmb, Quantizer.of(cents))
-
-  /** Incremental IVF maintenance — the ANN analogue of q61's
-    * incremental dedup (reference analogue: the pretrained-model
-    * serving surface, Week#6_assignment.ipynb:443-499): append a new
-    * embedding batch into an existing [[ivfWrite]] serving layout
-    * WITHOUT retraining. Each new vector is assigned to its nearest
-    * FROZEN centroid and appended `partitionBy("cell")` — parquet
-    * append only creates files under the cells the batch actually
-    * touches, so untouched cells' files (and any page cache /
-    * replication state behind them) are never rewritten, and a probe
-    * stays a partition-pruned scan of nprobe cells over base+delta
-    * files alike. Centroid drift under sustained appends is the
-    * documented retrain trigger (re-run [[ivfLearned]] and
-    * [[ivfWrite]] when q102's avg_d2 census degrades); q139 puts the
-    * assignment-parity contract under the oracle gate and
-    * PipelineOpsSpec proves the file-level physics.
-    */
-  def ivfAppend(newEmb: DataFrame, cents: DataFrame, path: String): Unit =
-    ivfAssignNew(newEmb, cents)
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** Tombstone DELETE for the [[ivfWrite]] serving layout — the CRUD
-    * leg [[ivfAppend]] left open: a vector removed upstream (dedup
-    * verdict, takedown, TTL) must leave the index WITHOUT rewriting
-    * immutable cell files. Deleted ids append to `_tombstones/` under
-    * the index root — the underscore prefix makes the directory
-    * invisible to Spark's file listing, so [[ivfRead]] of the base
-    * layout is untouched and only [[ivfReadLive]] pays the filter.
-    * This is the parquet rendition of the LSM delete marker, and the
-    * same dead/live split [[graft.operators.Pipeline.resolveDeltas]]
-    * models at corpus grain.
+  /** Tombstone DELETE for a stored layout — a vector removed upstream
+    * (dedup verdict, takedown, TTL) must leave the index WITHOUT
+    * rewriting immutable cell files. Deleted ids append to
+    * `_tombstones/` under the index root — the underscore prefix makes
+    * the directory invisible to Spark's file listing, so
+    * [[IvfLayout.read]] of the base layout is untouched and only
+    * [[IvfLayout.readLive]] pays the filter. This is the parquet
+    * rendition of the LSM delete marker, and the same dead/live split
+    * [[graft.operators.Pipeline.resolveDeltas]] models at corpus
+    * grain. Payload-agnostic: every layout's tombstones are vec_ids.
     */
   def ivfDelete(ids: DataFrame, path: String): Unit =
     ids.select(col("vec_id").cast("long"))
       .write.mode("append").parquet(s"$path/_tombstones")
 
-  /** The serving read: base+delta files MINUS tombstones. The
-    * anti-join broadcasts the tombstone set (bounded by
-    * deletes-since-compaction — a deployment compacts via
-    * [[ivfCompact]] before it outgrows the broadcast threshold, the
-    * LSM discipline) and sits ABOVE the scan, so a probe's
-    * partition pruning on `cell` still reads only the probed cells'
-    * files (PipelineOpsSpec proves this physically via the scan's
-    * numFiles metric, and probe parity after delete).
+  /** q109's per-vector int8 scale (max |v| / 127) and codes
+    * (round(v/scale) ∈ [−127, 127], all zero for a zero vector) — the
+    * one spelling [[quantizeInt8]] and the SQ8 layout's encoder share.
     */
-  def ivfReadLive(s: SparkSession, path: String): DataFrame = {
-    val idx = ivfRead(s, path)
-    // existence resolves through the path's OWN FileSystem — a
-    // java.io.File check is silently false for hdfs://s3a:// roots,
-    // which would serve deleted vectors as live (the exact takedown
-    // case tombstones exist for)
-    ivfTombstones(s, path).fold(idx)(t =>
-      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
+  private def int8Scale(v: Column): Column =
+    array_max(transform(v, x => abs(x))) / lit(127.0)
+  private def int8Code(v: Column, scale: Column): Column =
+    when(scale === 0.0, transform(v, _ => lit(0L)))
+      .otherwise(transform(v, x => round(x / scale).cast("long")))
+
+  /** The member codec of a stored IVF layout: the full-precision
+    * embedding, q109's (scale, int8 codes), or PQ codes of the
+    * vector's residual against the layout's `_books` codebooks.
+    */
+  private[graft] sealed trait IvfCodec
+  private[graft] object IvfCodec {
+    case object Full extends IvfCodec
+    case object Sq8 extends IvfCodec
+    case object Pq extends IvfCodec
   }
 
-  /** Persist everything an IVF probe needs so serving never retrains
-    * or rescans the corpus: the index `partitionBy("cell")` at
-    * `root/index`, the k-row centroid table at `root/_cents`, and the
-    * query vector at `root/_query` (stand-in for the request payload —
-    * a real service gets it over the wire). One-off build cost;
-    * [[ivfProbeStored]] then reads ≤nprobe cells' files per query
-    * however large the corpus. `centsPre` is a quantizer the caller
-    * already trained on the same trajectory — q204 builds three
-    * layouts over one corpus and shares one [[ivfTrain]] between them.
+  /** A stored IVF serving layout — single- or multi-tenant × one member
+    * codec — and the one owner of its on-disk format:
+    *  - the index at `root/index`, written `partitionBy(cell)` or
+    *    `partitionBy(tb, cell)`: a probe of nprobe cells is a
+    *    partition-pruned scan of those cells' files (under ONE tenant's
+    *    `tb=` dir when tenanted — the dense twin of the q175 lexical
+    *    layout), and a tenant's offboarding reclaims exactly its own
+    *    `tb=` subtree;
+    *  - the declared index [[schema]] (partition columns long) every
+    *    read uses, so no read of a stored layout runs an inference job;
+    *  - the member encoding ([[encode]]): the embedding, q109's (scale,
+    *    byte codes — parquet BYTEs hold them losslessly and dequantize
+    *    to q136's bits), or 4 PQ code bytes (q149's residual codes);
+    *  - the sidecars: the k-row `_cents` quantizer and the `_query`
+    *    payload (stand-in for the request a service gets over the
+    *    wire), plus q165's `_queries` batch for the full single-tenant
+    *    layout and the four residual codebooks `_books` for PQ;
+    *  - the scorer: cosine over the stored (or dequantized) vector,
+    *    or the 4-term ADC lookup sum over the stored codes.
+    * Build, append and the maintenance stream all encode through the
+    * same per-row kernel against the layout's FROZEN quantizers, so a
+    * member is byte-identical whichever path landed it and arrival
+    * order is invisible to probes (q198/q200/q202's law). Tenant
+    * isolation is exact by construction: cell assignment and codes
+    * are per-row functions of the vector, so a tenant's probe equals
+    * one over its vectors alone (q191/q195/q201's law).
     */
-  def ivfServingSetup(s: SparkSession, dir: String, root: String,
-      k: Int = 8, iters: Int = 2,
-      centsPre: Option[Quantizer] = None): Unit = {
-    import s.implicits._
-    val emb = embCached(s, dir)
-    val q = centsPre.getOrElse(ivfTrain(emb, k, iters))
-    graft.core.Par.all(s, Seq(
-      () => ivfWrite(ivfAssign(emb, q), s"$root/index"),
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query"),
-      () => emb.filter($"vec_id".isin(AnnBatchIds: _*))
-        .select($"vec_id".as("query_id"), vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_queries")))
+  private[graft] final case class IvfLayout(tenants: Boolean,
+      codec: IvfCodec) {
+    import IvfCodec._
+
+    /** Partition columns, tenant first. Only the two-level trees
+      * hash-distribute before a write — [[byParts]]'s measured rule.
+      */
+    val parts: Seq[String] = if (tenants) Seq("tb", "cell") else Seq("cell")
+
+    /** The index schema the writers produce, partition columns long. */
+    val schema: StructType = StructType.fromDDL((codec match {
+      case Full => Seq("vec_id BIGINT", "embedding ARRAY<FLOAT>")
+      case Sq8 => Seq("vec_id BIGINT", "scale DOUBLE", "code ARRAY<TINYINT>")
+      case Pq => Seq("vec_id BIGINT", "code ARRAY<TINYINT>")
+    }) ++ parts.map(p => s"$p BIGINT") mkString ", ")
+
+    /** ServingBench's key for the layout (`ivf`, `ivf_tenant_sq8`, …). */
+    def name: String = "ivf" + (if (tenants) "_tenant" else "") +
+      (codec match { case Full => ""; case Sq8 => "_sq8"; case Pq => "_pq" })
+
+    private def tbCols: Seq[Column] =
+      if (tenants) Seq(col("tb").cast("long").as("tb")) else Nil
+    private def tbNames: Seq[String] = if (tenants) Seq("tb") else Nil
+
+    /** Persist encoded members under `path` (overwrite or append). */
+    def write(index: DataFrame, path: String,
+        mode: String = "overwrite"): Unit =
+      (if (tenants) byParts(index, parts: _*) else index)
+        .write.mode(mode).partitionBy(parts: _*).parquet(path)
+
+    def read(s: SparkSession, path: String): DataFrame =
+      s.read.schema(schema).parquet(path)
+
+    /** The serving read: base+delta files MINUS tombstones. The
+      * anti-join broadcasts the tombstone set (bounded by
+      * deletes-since-compaction — a deployment [[compact]]s before it
+      * outgrows the broadcast threshold, the LSM discipline) and sits
+      * ABOVE the scan, so a probe's partition pruning still reads only
+      * the probed cells' files (PipelineOpsSpec proves this via the
+      * scan's numFiles metric).
+      */
+    def readLive(s: SparkSession, path: String): DataFrame = {
+      val idx = read(s, path)
+      // existence resolves through the path's OWN FileSystem — a
+      // java.io.File check is silently false for hdfs://s3a:// roots,
+      // which would serve deleted vectors as live
+      ivfTombstones(s, path).fold(idx)(t =>
+        idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    }
+
+    /** (vec_id, embedding[, tb]) rows as stored members against frozen
+      * quantizers: one zero-shuffle projection computing the cell (the
+      * centroid rows as a literal inside `nearest_centroid`) and the
+      * payload; PQ adds one broadcast of the four packed codebooks.
+      */
+    private def encodeWith(emb: DataFrame, q: Quantizer,
+        books: Option[DataFrame]): DataFrame = codec match {
+      case Full => ivfAssign(emb, q, tbCols: _*)
+      case Sq8 =>
+        val v = vec(col("embedding"))
+        emb.select((col("vec_id") +: tbCols) ++
+            Seq(v.as("v"), int8Scale(v).as("scale")): _*)
+          .select((Seq(col("vec_id"), col("scale"),
+            transform(int8Code(col("v"), col("scale")), _.cast("byte"))
+              .as("code")) ++ tbNames.map(col) :+
+            q.cellOf(col("v")).as("cell")): _*)
+      case Pq =>
+        pqEncode(pqResiduals(ivfAssign(emb, q, tbCols: _*), q, tbNames),
+          books.get, tbNames)
+    }
+
+    /** Full and SQ8 members' vectors as `mv` (array<double>): the
+      * stored embedding, or the codes dequantized (code·scale) inside
+      * the scan's projection — one column the scorer reads three times.
+      */
+    private[operators] def withVec(df: DataFrame): DataFrame =
+      df.withColumn("mv", if (codec == Full) vec(col("embedding"))
+        else transform(col("code"), c => c.cast("double") * col("scale")))
+
+    /** Encode NEW rows against the layout's frozen `_cents` (and
+      * `_books`) — the one kernel the batch [[append]] and the
+      * maintenance stream's add leg write.
+      */
+    def encode(s: SparkSession, root: String, emb: DataFrame): DataFrame =
+      encodeWith(emb, ivfQuantizer(s, root), Option.when(codec == Pq)(
+        graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema)))
+
+    /** Retrain-free APPEND (FAISS's `add` on the at-rest form): files
+      * are created only under the cells (and tenants) the batch
+      * touches, untouched cells' files are never rewritten, and the
+      * appended layout equals a full build over the union. Quantizer
+      * drift under sustained appends is the retrain trigger (rebuild
+      * when q102's avg_d2 census degrades).
+      */
+    def append(s: SparkSession, root: String, emb: DataFrame): Unit =
+      write(encode(s, root, emb), s"$root/index", "append")
+
+    /** Build the serving root from the corpus at `dir`: train the
+      * coarse quantizer once ([[ivfTrain]], unless `pre` is one the
+      * caller trained on the same trajectory — q204 shares one across
+      * three layouts), encode the members (`members` restricts which
+      * vectors land — training always sees the whole corpus, so a
+      * layout built over a subset and [[append]]-completed equals the
+      * full build), and write the index and the sidecars as
+      * [[graft.core.Par.all]] legs (run one after another, q193's
+      * build+probe measured 1.25–1.3× slower). The SQ8 index is ONE
+      * projection computing cell and codes; PQ checkpoints the
+      * residuals once — they train the four codebooks in one exploded
+      * pass ([[pqTrainBooks]]) and are encoded against them.
+      */
+    def build(s: SparkSession, dir: String, root: String,
+        pre: Option[Quantizer] = None, members: Column = lit(true)): Unit = {
+      val emb = embCached(s, dir)
+      val q = pre.getOrElse(ivfTrain(emb, k = 8, iters = 2))
+      val src = emb.select((col("vec_id") +: col("embedding") +:
+        (if (tenants) Seq(col("label").cast("long").as("tb")) else Nil)): _*)
+      val (index, books) = codec match {
+        case Pq =>
+          val withRes = pqResiduals(ivfAssign(src, q, tbCols: _*), q,
+            tbNames).localCheckpoint()
+          val trained = pqTrainBooks(withRes).localCheckpoint()
+          (pqEncode(withRes.filter(members), trained, tbNames), Some(trained))
+        case _ => (encodeWith(src.filter(members), q, None), None)
+      }
+      def side(df: DataFrame, name: String): () => Unit =
+        () => df.write.mode("overwrite").parquet(s"$root/$name")
+      graft.core.Par.all(s, Seq(() => write(index, s"$root/index"),
+          side(q.frame(s), "_cents")) ++
+        books.map(b => side(b.select("m", "cl", "cvec"), "_books")) ++
+        Seq(side(emb.filter(col("vec_id") === 0)
+          .select(vec(col("embedding")).as("qv")), "_query")) ++
+        Option.when(codec == Full && !tenants)(side(
+          emb.filter(col("vec_id").isin(AnnBatchIds: _*)).select(
+            col("vec_id").as("query_id"), vec(col("embedding")).as("qv")),
+          "_queries")))
+    }
+
+    /** The probe-only serving path — what a query costs once the layout
+      * exists: [[ivfPickCells]] ranks the k `_cents` rows on the driver
+      * (≤nprobe cells — the index filter carries LITERALS the planner
+      * prunes partitions with, under tenant `tb` when tenanted), then
+      * the live members of those cells are scored: exact cosine
+      * against the stored (full) or dequantized-in-scan (SQ8) vector,
+      * ranked round(cos, 6) desc — q128/q136's rule; or the fixed-order
+      * 4-term ADC lookup sum over the stored PQ codes against per-cell
+      * tables from `_books` and the query's per-cell residual, ranked
+      * dround(adc, 6) asc — q149's rule, no vector arithmetic per
+      * candidate. Answers equal the in-query compositions (same oracle
+      * SQL): compression changes the bytes read, never the ranking.
+      */
+    def probe(s: SparkSession, root: String, tb: Option[Long] = None,
+        nprobe: Int = 3, k: Int = 10,
+        excludeVecId: Option[Long] = None): DataFrame = {
+      require(tb.isDefined == tenants,
+        s"a $name probe takes ${if (tenants) "one" else "no"} tenant")
+      val pick = ivfPickCells(s, root, nprobe)
+      val inCells = col("cell").isin(pick.cells: _*)
+      val scan = readLive(s, s"$root/index")
+        .filter(tb.fold(inCells)(t => col("tb") === t && inCells))
+      val cand = excludeVecId.fold(scan)(id => scan.filter(col("vec_id") =!= id))
+      codec match {
+        case Pq =>
+          pqAdcRank(cand, pqTabs(s.createDataFrame(
+              java.util.Arrays.asList(pick.picked: _*), CentsSchema)
+            .select(col("cell"), col("centroid"), pick.qv.as("qv")),
+            graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema),
+            "cell"), k)
+        case _ =>
+          withVec(cand).withColumn("cos", cosine(col("mv"), pick.qv))
+            .select(col("vec_id"), col("cell"), round(col("cos"), 6).as("cos"))
+            .orderBy(round(col("cos"), 6).desc, col("vec_id").asc)
+            .limit(k)
+      }
+    }
+
+    /** Purge an ENTIRE tenant — the dense twin of
+      * TextAnalysis.bm25PurgeTenant (offboarding / right-to-erasure):
+      * every live vector of the tenant is tombstoned in one append, so
+      * the tenant is unservable immediately; the next [[compact]]
+      * drops the bytes and the tenant's whole `tb=` subtree. No corpus
+      * stats to repair (cosine and ADC rankings have no N/avgdl), so a
+      * re-run finds zero live victims and appends nothing. The victim
+      * scan prunes to the tenant's own `tb=` dirs.
+      */
+    def purge(s: SparkSession, root: String, tb: Long): Unit = {
+      require(tenants, s"$name has no tenants to purge")
+      readLive(s, s"$root/index").filter(col("tb") === tb)
+        .select(col("vec_id"))
+        .write.mode("append").parquet(s"$root/index/_tombstones")
+    }
+
+    /** Fold tombstones into the files: rewrite the LIVE rows as a fresh
+      * index at `dest` (no `_tombstones` — the deleted rows, and a
+      * purged tenant's `tb=` dirs, are physically gone). A NEW root
+      * because overwriting a path while reading it is undefined; the
+      * caller swaps serving roots atomically ([[graft.core.Roots]]).
+      * Payloads move untouched — codes are frozen-quantizer pure, so
+      * compaction never re-encodes.
+      */
+    def compact(s: SparkSession, path: String, dest: String): Unit =
+      write(readLive(s, path), dest)
   }
 
-  /** [[ivfProbeStored]] for a QUERY BATCH against the persisted
-    * layout — the serving form of q165: per-query nprobe cells from
-    * the broadcast centroid×queries product (per-query window, q128's
-    * rules), the UNION of probed cells collected to a bounded
-    * ≤|queries|·nprobe literal list so the index scan still prunes
-    * partitions statically, then ONE cell→query fan-out join and one
-    * per-query top-k window. Query vectors themselves are excluded
-    * from results (q165's contract — its answer on an un-deleted
-    * layout equals q165's); tombstones honored via [[ivfReadLive]].
+  private[graft] object IvfLayout {
+    /** The six stored layouts: {single, tenant} × {full, SQ8, PQ}. */
+    val all: Seq[IvfLayout] = for (t <- Seq(false, true);
+      c <- Seq(IvfCodec.Full, IvfCodec.Sq8, IvfCodec.Pq)) yield IvfLayout(t, c)
+  }
+
+  /** The full-precision single-tenant layout — the one with the
+    * `_queries` batch sidecar ([[ivfProbeStoredBatch]]).
+    */
+  private[graft] val FullLayout = IvfLayout(tenants = false, IvfCodec.Full)
+
+  /** The full-precision layout's probe for a QUERY BATCH — the serving
+    * form of q165: per-query nprobe cells from the broadcast
+    * centroid×queries product (per-query window, q128's rules), the
+    * UNION of probed cells collected to a bounded ≤|queries|·nprobe
+    * literal list so the index scan still prunes partitions
+    * statically, then ONE cell→query fan-out join and one per-query
+    * top-k window. Query vectors themselves are excluded from results
+    * (q165's contract — its answer on an un-deleted layout equals
+    * q165's); tombstones honored via [[IvfLayout.readLive]].
     */
   def ivfProbeStoredBatch(s: SparkSession, root: String, nprobe: Int = 3,
       k: Int = 10): DataFrame = {
@@ -1067,7 +1232,7 @@ object Similarity extends QueryPack {
       .collect().map(_.getLong(0)).toSeq
     val topW = Window.partitionBy($"query_id")
       .orderBy($"cos".desc, $"vec_id".asc)
-    ivfReadLive(s, s"$root/index")
+    FullLayout.readLive(s, s"$root/index")
       .filter($"cell".isin(cells: _*))
       .join(broadcast(qs.select($"query_id".as("vec_id"))),
         Seq("vec_id"), "left_anti")
@@ -1079,41 +1244,6 @@ object Similarity extends QueryPack {
       .orderBy($"query_id".asc, $"cos".desc, $"vec_id".asc)
   }
 
-  /** The probe-only serving path against a persisted [[ivfServingSetup]]
-    * layout — what a query actually costs once the index exists: pick
-    * nprobe cells from the BROADCAST k-row centroid table (the cell
-    * ids collect to a bounded ≤nprobe driver list — the
-    * SkewJoin.hotKeys class — so the index filter carries LITERALS the
-    * planner prunes partitions with), then exact cosine top-k inside
-    * those cells via [[ivfReadLive]] (tombstones honored). Identical
-    * ranking rule to q128; its answer on an un-deleted layout equals
-    * q128's.
-    */
-  def ivfProbeStored(s: SparkSession, root: String, nprobe: Int = 3,
-      k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val pick = ivfPickCells(s, root, nprobe)
-    val base = ivfReadLive(s, s"$root/index")
-      .filter($"cell".isin(pick.cells: _*))
-    excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .withColumn("cos", cosine(vec($"embedding"), pick.qv))
-      .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
-      .orderBy(round($"cos", 6).desc, $"vec_id".asc)
-      .limit(k)
-  }
-
-  /** Fold tombstones into the files: rewrite the LIVE set as a fresh
-    * [[ivfWrite]] layout at `dest` (no `_tombstones` dir — the
-    * deleted rows are physically gone). Written to a NEW root because
-    * overwriting a path while reading it is undefined; the caller
-    * swaps serving roots atomically (the q96 snapshot discipline).
-    * Untouched at probe time — compaction is the background half of
-    * the delete story, exactly like [[graft.sources.Compaction]] for
-    * the corpus files.
-    */
-  def ivfCompact(s: SparkSession, path: String, dest: String): Unit =
-    ivfWrite(ivfReadLive(s, path), dest)
-
   /** Per-cell dead/total member census — the IVF twin of
     * TextAnalysis.bm25DeadByBucket (q172's skew view on the dense
     * layout): cell files are fixed-grain rows, so the dead-row
@@ -1124,7 +1254,7 @@ object Similarity extends QueryPack {
     */
   def ivfDeadByCell(s: SparkSession, path: String): DataFrame = {
     import s.implicits._
-    val base = ivfRead(s, path)
+    val base = FullLayout.read(s, path)
     val flagged = ivfTombstones(s, path).fold(
         base.withColumn("is_dead", lit(0L)))(t => base.join(
       broadcast(t.withColumn("is_dead", lit(1L))), Seq("vec_id"), "left"))
@@ -1143,122 +1273,30 @@ object Similarity extends QueryPack {
     */
   private[graft] val IvfTenants: Seq[Long] = Seq(0L, 1L)
 
-  /** Deterministic temp root for stored-IVF oracle rows (the
-    * bm25TempIndexPath discipline on the dense side).
+  /** Deterministic temp root for a stored-IVF oracle row (the
+    * bm25TempIndexPath discipline on the dense side), deleted when the
+    * JVM exits.
     */
-  private[graft] def ivfTempRoot(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${
-      java.lang.Integer.toHexString(dir.hashCode)}"
+  private[graft] def ivfTempRoot(s: SparkSession, dir: String,
+      suffix: String): String =
+    graft.core.Fs.deleteOnExit(s,
+      s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${
+        java.lang.Integer.toHexString(dir.hashCode)}$suffix")
 
-  /** Persist a MULTI-TENANT serving index `partitionBy(tb, cell)` —
-    * [[ivfWrite]] with the tenant dimension first, so one physical
-    * index serves every tenant and a tenant's probe is a TWO-LEVEL
-    * statically-pruned scan (its `tb=` dir, then ≤nprobe `cell=` dirs
-    * inside it) — the dense twin of the q175 lexical layout. A
-    * tenant's offboarding reclaims exactly its own `tb=` subtree;
-    * no other tenant's files are ever rewritten.
+  /** Both [[IvfTenants]]' probes off one tenant layout as one frame,
+    * excluding the query vector, tagged and ordered by tenant.
     */
-  def ivfWriteTenants(index: DataFrame, path: String): Unit =
-    byParts(index, "tb", "cell")
-      .write.mode("overwrite").partitionBy("tb", "cell").parquet(path)
-
-  /** Read the tenant layout back with partition-dir int32 inference
-    * undone on BOTH levels (casts sit above the scan — two-level
-    * pruning on (tb, cell) still applies).
-    */
-  def ivfReadTenants(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
-      .withColumn("tb", col("tb").cast("long"))
-      .withColumn("cell", col("cell").cast("long"))
-
-  /** The tenant layout's serving view: base files MINUS tombstones —
-    * [[ivfReadLive]]'s discipline (broadcast anti-join ABOVE the scan,
-    * pruning intact); tenant purges (q192) land here.
-    */
-  def ivfReadLiveTenants(s: SparkSession, path: String): DataFrame = {
-    val idx = ivfReadTenants(s, path)
-    ivfTombstones(s, path).fold(idx)(t =>
-      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
+  private def tenantProbes(s: SparkSession, layout: IvfLayout,
+      root: String): DataFrame = {
+    val probes = IvfTenants.map { tb =>
+      layout.probe(s, root, Some(tb), excludeVecId = Some(0L))
+        .withColumn("tenant", lit(tb))
+    }.reduce(_ unionByName _)
+    probes.orderBy(col("tenant").asc +: (layout.codec match {
+      case IvfCodec.Pq => Seq(graft.core.Exact.dround(col("adc_d2"), 6).asc)
+      case _ => Seq(col("cos").desc)
+    }) :+ col("vec_id").asc: _*)
   }
-
-  /** Build the multi-tenant serving root: ONE corpus-wide quantizer
-    * (cell assignment is a pure per-row function of the vector, so
-    * tenant isolation is exact by construction — a tenant's probe
-    * equals an index built over its vectors alone with the same
-    * frozen centroids, the law q191's oracle hash-checks), index
-    * written `partitionBy(tb, cell)`, centroids + query payload as
-    * sidecars. Training cost is [[ivfLearned]]'s (per-round one k-row
-    * aggregation, zero-shuffle assignment); the tenant tag rides the
-    * SAME assignment projection — no vec_id re-join.
-    */
-  def ivfServingSetupTenants(s: SparkSession, dir: String, root: String,
-      k: Int = 8, iters: Int = 2): Unit = {
-    import s.implicits._
-    val emb = embCached(s, dir)
-    val q = ivfTrain(emb, k, iters)
-    val idx = ivfAssign(emb, q, $"label".cast("long").as("tb"))
-    graft.core.Par.all(s, Seq(
-      () => ivfWriteTenants(idx, s"$root/index"),
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query")))
-  }
-
-  /** One tenant's probe against the shared layout: nprobe cells from
-    * the broadcast k-row centroid table (cell choice is
-    * query-vs-centroid only — tenant-independent, exactly the cells
-    * an index over this tenant alone would probe), then exact cosine
-    * top-k inside `tb = tenant ∧ cell ∈ probed` — a TWO-LEVEL
-    * partition-pruned scan. Identical ranking rule and columns to
-    * [[ivfProbeStored]]; tombstones honored.
-    */
-  def ivfProbeStoredTenant(s: SparkSession, root: String, tb: Long,
-      nprobe: Int = 3, k: Int = 10,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val pick = ivfPickCells(s, root, nprobe)
-    val base = ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb && $"cell".isin(pick.cells: _*))
-    excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .withColumn("cos", cosine(vec($"embedding"), pick.qv))
-      .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
-      .orderBy(round($"cos", 6).desc, $"vec_id".asc)
-      .limit(k)
-  }
-
-  /** Purge an ENTIRE tenant from the shared layout — the dense twin
-    * of TextAnalysis.bm25PurgeTenant (offboarding / right-to-erasure):
-    * every live vector of the tenant is tombstoned in one append, so
-    * the tenant is unservable immediately; the next
-    * [[ivfCompactTenants]] rewrite drops the bytes (and the tenant's
-    * whole `tb=` subtree disappears with them). Unlike the lexical
-    * side there are NO corpus stats to repair — cosine ranking has no
-    * N/avgdl — so the purge is a single idempotent write: a re-run
-    * (crash recovery) finds zero live victims and appends nothing,
-    * and duplicate tombstone rows are harmless (readers distinct).
-    * The victim scan itself prunes to the tenant's own `tb=` dirs.
-    */
-  def ivfPurgeTenant(s: SparkSession, root: String, tb: Long): Unit = {
-    import s.implicits._
-    ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb)
-      .select($"vec_id")
-      .write.mode("append").parquet(s"$root/index/_tombstones")
-  }
-
-  /** Fold tombstones into the tenant layout's files — [[ivfCompact]]
-    * on the two-level tree: live rows rewrite `partitionBy(tb, cell)`
-    * at a NEW root (caller swaps via [[graft.core.Roots]]); a fully
-    * purged tenant's `tb=` dirs simply don't exist in the new
-    * generation. PAYLOAD-AGNOSTIC (r15 advice): live rows rewrite with
-    * whatever columns the layout stores — full-precision
-    * (vec_id, embedding) and compressed (vec_id, scale, code) tenant
-    * trees both compact through this one function (the member payload
-    * is opaque to tombstone resolution; only vec_id/tb/cell matter).
-    */
-  def ivfCompactTenants(s: SparkSession, path: String, dest: String): Unit =
-    ivfWriteTenants(ivfReadLiveTenants(s, path), dest)
 
   /** Build + two tenants' probes as one oracle row — the dense twin
     * of q175: each tenant's ranking from the SHARED `partitionBy(tb,
@@ -1273,16 +1311,10 @@ object Similarity extends QueryPack {
     * each probe reads ≤nprobe cell dirs under ONE tenant dir.
     */
   def q191IvfTenantProbe(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = ivfTempRoot(dir) + "_tenants"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupTenants(s, dir, root)
-    IvfTenants.map { tb =>
-      ivfProbeStoredTenant(s, root, tb, excludeVecId = Some(0L))
-        .withColumn("tenant", lit(tb))
-    }.reduce(_ unionByName _)
-      .orderBy($"tenant".asc, $"cos".desc, $"vec_id".asc)
+    val layout = IvfLayout(tenants = true, IvfCodec.Full)
+    val root = ivfTempRoot(s, dir, "_tenants")
+    layout.build(s, dir, root)
+    tenantProbes(s, layout, root)
   }
 
   /** Purge-then-prove on the dense layout — the twin of q180: purge
@@ -1295,213 +1327,102 @@ object Similarity extends QueryPack {
     * re-runs idempotently, and compaction drops its `tb=` subtree.
     */
   def q192IvfTenantPurge(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = ivfTempRoot(dir) + "_tpurge"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupTenants(s, dir, root)
-    ivfPurgeTenant(s, root, IvfTenants(1))
-    IvfTenants.map { tb =>
-      ivfProbeStoredTenant(s, root, tb, excludeVecId = Some(0L))
-        .withColumn("tenant", lit(tb))
-    }.reduce(_ unionByName _)
-      .orderBy($"tenant".asc, $"cos".desc, $"vec_id".asc)
+    val layout = IvfLayout(tenants = true, IvfCodec.Full)
+    val root = ivfTempRoot(s, dir, "_tpurge")
+    layout.build(s, dir, root)
+    layout.purge(s, root, IvfTenants(1))
+    tenantProbes(s, layout, root)
   }
 
   // --- q198: tenant layout built by the MAINTENANCE STREAM ---------------------
-  /** The tenant layout's streaming-ingest leg under the oracle gate
-    * (r15 verdict #4 — before this, a multi-tenant deployment had to
-    * rebuild batch-side): train the corpus-wide quantizer once, then
-    * let the WHOLE corpus arrive as two CRUD micro-batches through
-    * [[graft.streaming.IvfMaintain.applyBatchTenants]] (the staged
-    * exactly-once publish, `partitionBy(tb, cell)`), and probe both
-    * tenants off the stream-built layout. The answer must equal
-    * q191's batch-built layout (same oracle SQL): frozen-centroid
+  /** The tenant layout's streaming-ingest leg under the oracle gate:
+    * train the corpus-wide quantizer once (sidecars written, index
+    * EMPTY), then let the WHOLE corpus arrive as two CRUD
+    * micro-batches through [[graft.streaming.IvfMaintain.applyBatch]]
+    * (the staged exactly-once publish, `partitionBy(tb, cell)`), and
+    * probe both tenants off the stream-built layout. The answer must
+    * equal q191's batch-built layout (same oracle SQL): frozen-centroid
     * assignment is a pure per-row function, so arrival order and
     * batch boundaries are invisible to probes — the law that makes
     * streaming ingest SAFE for a serving fleet.
     *
     * Scale shape: per batch one zero-shuffle assignment projection
-    * (k-row centroid broadcast) + a staged write touching only the
+    * (k centroid rows as a literal) + a staged write touching only the
     * batch's (tenant, cell) dirs; probes stay two-level pruned.
     * StreamingSpec adds the live-stream twin (MemoryStream feed,
     * stream==batch parity, purge-del rows, replay refusal).
     */
-  def q198IvfTenantMaintain(s: SparkSession, dir: String): DataFrame = {
+  def q198IvfTenantMaintain(s: SparkSession, dir: String): DataFrame =
+    maintainedByStream(s, dir, IvfLayout(tenants = true, IvfCodec.Full),
+      "_tmaint")
+
+  /** Build `layout` with no members, then feed the whole corpus as
+    * two add micro-batches through the maintenance stream's batch
+    * body and probe — q198's and q202's shared arrival-law row. The
+    * root is reset first: a bench rep re-running the query must not
+    * have its batches refused as replays.
+    */
+  private def maintainedByStream(s: SparkSession, dir: String,
+      layout: IvfLayout, suffix: String): DataFrame = {
     import s.implicits._
-    val root = ivfTempRoot(dir) + "_tmaint"
+    val root = ivfTempRoot(s, dir, suffix)
     graft.core.Fs.deleteRecursive(s, root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    layout.build(s, dir, root, members = lit(false))
     val emb = embCached(s, dir)
-    val q = ivfTrain(emb, k = 8, iters = 2)
-    graft.core.Par.all(s, Seq(
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query")))
     val half = broadcast(
       emb.agg(floor(max($"vec_id") / 2).cast("long").as("split")))
     val feed = emb.crossJoin(half)
       .select(lit("add").as("op"), $"vec_id", $"embedding",
         $"label".cast("long").as("tb"), $"split")
-    graft.streaming.IvfMaintain.applyBatchTenants(
-      feed.filter($"vec_id" <= $"split").drop("split"), 0L, root)
-    graft.streaming.IvfMaintain.applyBatchTenants(
-      feed.filter($"vec_id" > $"split").drop("split"), 1L, root)
-    IvfTenants.map { tb =>
-      ivfProbeStoredTenant(s, root, tb, excludeVecId = Some(0L))
-        .withColumn("tenant", lit(tb))
-    }.reduce(_ unionByName _)
-      .orderBy($"tenant".asc, $"cos".desc, $"vec_id".asc)
+    Seq(feed.filter($"vec_id" <= $"split"), feed.filter($"vec_id" > $"split"))
+      .zipWithIndex.foreach { case (b, i) =>
+        graft.streaming.IvfMaintain.applyBatch(layout, b.drop("split"),
+          i.toLong, root)
+      }
+    if (layout.tenants) tenantProbes(s, layout, root)
+    else layout.probe(s, root, excludeVecId = Some(0L))
   }
 
   // --- q193: compressed-at-rest IVF-SQ8 serving layout -------------------------
-  /** Build the COMPRESSED serving root — q136's IVF-SQ8 composition
-    * persisted: the index stores (vec_id, scale, code[64] as BYTES,
-    * cell) `partitionBy(cell)` — the embedding column never reaches
-    * disk, cutting index bytes ~4× (64 B codes + 8 B scale vs 256 B
-    * of float32, before encoding) — plus centroid/query sidecars.
-    * This is the layout FAISS ships as IVFx,SQ8 and the actual
-    * 100 TB win: probe cost is dominated by index bytes on disk and
-    * over the wire, and those shrink 4× at unchanged file counts
-    * (ServingBench measures exactly that).
-    *
-    * Exactness: codes are q109's (round(v/scale) ∈ [−127,127] — a
-    * parquet BYTE holds them losslessly, and byte→double dequantizes
-    * to the same bits as q136's long→double).
-    *
-    * Job shape: the quantizer trains once ([[ivfTrain]]: the seed
-    * rows, then one k-row aggregation per Lloyd update, collected to
-    * the driver), and the index is ONE projection over the embeddings
-    * computing both the cell (the centroid rows as a literal inside
-    * `nearest_centroid`) and the int8 codes — no join, no broadcast,
-    * no re-training per write. The three writes (index, `_cents`,
-    * `_query`) stay [[graft.core.Par.all]] legs: run one after another,
-    * q193's build+probe measured 1.25–1.3× slower at 200–500 vectors.
+  /** The COMPRESSED serving root under the oracle gate — q136's IVF-SQ8
+    * composition persisted: the index stores (vec_id, scale, code[64]
+    * as BYTES, cell) — the embedding column never reaches disk,
+    * cutting index bytes ~4× (64 B codes + 8 B scale vs 256 B of
+    * float32, before encoding). This is the layout FAISS ships as
+    * IVFx,SQ8 and the actual 100 TB win: probe cost is dominated by
+    * index bytes on disk and over the wire, and those shrink 4× at
+    * unchanged file counts (ServingBench measures exactly that).
+    * Build, then probe through the stored bytes — must hash-equal q136
+    * (same oracle SQL), proving at-rest quantization is invisible to
+    * answers.
     */
-  def ivfServingSetupSq8(s: SparkSession, dir: String, root: String,
-      k: Int = 8, iters: Int = 2,
-      centsPre: Option[Quantizer] = None): Unit = {
-    import s.implicits._
-    val emb = embCached(s, dir)
-    val q = centsPre.getOrElse(ivfTrain(emb, k, iters))
-    graft.core.Par.all(s, Seq(
-      () => quantizeInt8(emb)
-        .select($"vec_id", $"scale",
-          transform($"code", _.cast("byte")).as("code"),
-          q.cellOf($"v").as("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$root/index"),
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query")))
-  }
+  def q193IvfSq8Stored(s: SparkSession, dir: String): DataFrame =
+    storedProbe(s, dir, IvfLayout(tenants = false, IvfCodec.Sq8), "_sq8")
 
-  /** The probe against the compressed layout: [[ivfProbeStored]]'s
-    * cell pick, then DEQUANTIZE ONLY THE SCANNED CELLS (code·scale
-    * per member, inside the pruned scan's projection) and score
-    * exact cosine against the full-precision query. Answer is
-    * hash-identical to q136's in-query composition — compression
-    * changes the bytes read, never the ranking. Tombstones honored
-    * ([[ivfReadLive]]'s anti-join discipline).
+  /** Build a single-tenant `layout` under a temp root and probe it,
+    * excluding the query vector — q193/q197's build+probe row.
     */
-  def ivfProbeStoredSq8(s: SparkSession, root: String, nprobe: Int = 3,
-      k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val pick = ivfPickCells(s, root, nprobe)
-    val idx = s.read.schema(Sq8IndexSchema).parquet(s"$root/index")
-      .filter($"cell".isin(pick.cells: _*))
-    val live = ivfTombstones(s, s"$root/index").fold(idx)(t =>
-      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    excludeVecId.fold(live)(id => live.filter($"vec_id" =!= id))
-      .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
-      .withColumn("cos", cosine($"deq", pick.qv))
-      .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
-      .orderBy(round($"cos", 6).desc, $"vec_id".asc)
-      .limit(k)
-  }
-
-  /** The compressed layout under the oracle gate: build, then probe
-    * through the stored bytes — must hash-equal q136 (same oracle
-    * SQL), proving at-rest quantization is invisible to answers.
-    */
-  def q193IvfSq8Stored(s: SparkSession, dir: String): DataFrame = {
-    val root = ivfTempRoot(dir) + "_sq8"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupSq8(s, dir, root)
-    ivfProbeStoredSq8(s, root, excludeVecId = Some(0L))
+  private def storedProbe(s: SparkSession, dir: String, layout: IvfLayout,
+      suffix: String): DataFrame = {
+    val root = ivfTempRoot(s, dir, suffix)
+    layout.build(s, dir, root)
+    layout.probe(s, root, excludeVecId = Some(0L))
   }
 
   // --- q195: multi-tenant × compressed-at-rest IVF (the full production shape) -
-  /** Build the layout a shared vector fleet actually deploys: ONE
-    * corpus-wide quantizer, the index `partitionBy(tb, cell)` with the
-    * member payload stored as q109's (scale, byte codes) — q191's
-    * tenant isolation AND q193's ~4× at-rest cut in one tree. A
-    * tenant's probe is a two-level statically-pruned scan that
-    * dequantizes only the bytes it reads; a tenant's purge is
-    * [[ivfPurgeTenant]] unchanged (it touches only `vec_id`/`tb`, so
-    * it is layout-payload-agnostic); compaction/erasure reclaims the
-    * tenant's own `tb=` subtree of 1-byte codes.
-    */
-  def ivfServingSetupTenantsSq8(s: SparkSession, dir: String,
-      root: String, k: Int = 8, iters: Int = 2): Unit = {
-    import s.implicits._
-    val emb = embCached(s, dir)
-    val q = ivfTrain(emb, k, iters)
-    graft.core.Par.all(s, Seq(
-      () => quantizeInt8(emb)
-        .select($"vec_id", $"scale",
-          transform($"code", _.cast("byte")).as("code"),
-          $"label".cast("long").as("tb"), q.cellOf($"v").as("cell"))
-        .transform(byParts(_, "tb", "cell"))
-        .write.mode("overwrite").partitionBy("tb", "cell")
-        .parquet(s"$root/index"),
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query")))
-  }
-
-  /** One tenant's probe against the compressed shared layout:
-    * [[ivfProbeStoredTenant]]'s two-level pruned scan with
-    * [[ivfProbeStoredSq8]]'s scanned-cells-only dequantize. Ranking
-    * equals q136's rule restricted to the tenant's members.
-    */
-  def ivfProbeStoredTenantSq8(s: SparkSession, root: String, tb: Long,
-      nprobe: Int = 3, k: Int = 10,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val pick = ivfPickCells(s, root, nprobe)
-    val base = ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb && $"cell".isin(pick.cells: _*))
-    excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
-      .withColumn("cos", cosine($"deq", pick.qv))
-      .select($"vec_id", $"cell", round($"cos", 6).as("cos"))
-      .orderBy(round($"cos", 6).desc, $"vec_id".asc)
-      .limit(k)
-  }
-
   /** Build + two tenants' probes over the compressed shared layout as
-    * one oracle row — q191's isolation law with q136's quantized
-    * scoring: each tenant's ranking must equal the SQ8 probe over its
-    * vectors alone (cell assignment and codes are both per-row, so
-    * neither compression nor co-tenancy can leak a neighbor's rows).
+    * one oracle row — the layout a shared vector fleet actually
+    * deploys (q191's tenant isolation AND q193's ~4× at-rest cut in
+    * one tree): each tenant's ranking must equal the SQ8 probe over
+    * its vectors alone (cell assignment and codes are both per-row,
+    * so neither compression nor co-tenancy can leak a neighbor's
+    * rows).
     */
   def q195IvfTenantSq8(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = ivfTempRoot(dir) + "_tsq8"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupTenantsSq8(s, dir, root)
-    IvfTenants.map { tb =>
-      ivfProbeStoredTenantSq8(s, root, tb, excludeVecId = Some(0L))
-        .withColumn("tenant", lit(tb))
-    }.reduce(_ unionByName _)
-      .orderBy($"tenant".asc, $"cos".desc, $"vec_id".asc)
+    val layout = IvfLayout(tenants = true, IvfCodec.Sq8)
+    val root = ivfTempRoot(s, dir, "_tsq8")
+    layout.build(s, dir, root)
+    tenantProbes(s, layout, root)
   }
 
   // --- q194: IVF compact + atomic root swap, probed end to end ---------------
@@ -1528,29 +1449,27 @@ object Similarity extends QueryPack {
     */
   def q194IvfCompactSwap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = ivfTempRoot(dir) + "_swap"
+    val base = ivfTempRoot(s, dir, "_swap")
     graft.core.Fs.deleteRecursive(s, base)
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetup(s, dir, s"$base/gen0")
+    FullLayout.build(s, dir, s"$base/gen0")
     graft.core.Roots.publish(s, base, "gen0")
     ivfDelete(
       embCached(s, dir).filter($"vec_id" % 7 === 3).select($"vec_id"),
       s"${graft.core.Roots.current(s, base)}/index")
     // EAGER checkpoint: freeze the tombstone-view answer before the
     // swap mutates what the pointer resolves to (q173's rule)
-    val tombstoned = ivfProbeStored(s, graft.core.Roots.current(s, base),
+    val tombstoned = FullLayout.probe(s, graft.core.Roots.current(s, base),
         excludeVecId = Some(0L))
       .withColumn("stage", lit("tombstoned"))
       .localCheckpoint(true)
-    graft.streaming.IvfMaintain.compactAndSwap(s, base)
+    graft.streaming.IvfMaintain.compactAndSwap(s, base, FullLayout)
     tombstoned.unionByName(
-      ivfProbeStored(s, graft.core.Roots.current(s, base),
+      FullLayout.probe(s, graft.core.Roots.current(s, base),
         excludeVecId = Some(0L))
         .withColumn("stage", lit("compacted")))
   }
 
-  /** Point-in-time probe: [[ivfProbeStored]] pinned to generation
+  /** Point-in-time probe: the full-precision probe pinned to generation
     * `gen` under a [[graft.core.Roots]] base — the audit/repro read
     * ("what did the index answer before yesterday's compaction?")
     * that composes q184's point-in-time law with the q173 root-swap
@@ -1560,8 +1479,8 @@ object Similarity extends QueryPack {
   def ivfProbeAt(s: SparkSession, base: String, gen: String,
       nprobe: Int = 3, k: Int = 10,
       excludeVecId: Option[Long] = None): DataFrame =
-    ivfProbeStored(s, graft.core.Roots.at(s, base, gen),
-      nprobe, k, excludeVecId)
+    FullLayout.probe(s, graft.core.Roots.at(s, base, gen),
+      nprobe = nprobe, k = k, excludeVecId = excludeVecId)
 
   // --- q177: semantic train/eval contamination census -------------------------
   /** The EMBEDDING-level decontamination screen (q55 is the lexical
@@ -1682,7 +1601,7 @@ object Similarity extends QueryPack {
     * with the same Laplace-smoothed PSI terms. This is the alarm a
     * serving fleet reads for "did the corpus move out from under the
     * trained quantizer" — the documented retrain trigger (see
-    * [[ivfAppend]]) turned into a per-cell report: a cell whose share
+    * [[IvfLayout.append]]) turned into a per-cell report: a cell whose share
     * collapsed or exploded names WHERE the distribution moved, and
     * Σ psi_term against the 0.1/0.2 thresholds is the fleet rule.
     *
@@ -1843,10 +1762,9 @@ object Similarity extends QueryPack {
   def q204StoredRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val base = ivfTempRoot(dir) + "_rc"
-    Seq("f", "s", "p").foreach { sfx =>
-      val p = new org.apache.hadoop.fs.Path(base + sfx)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val layouts @ Seq(full, sq8, (pq, rootP)) = Seq(IvfCodec.Full -> "f",
+        IvfCodec.Sq8 -> "s", IvfCodec.Pq -> "p").map { case (c, sfx) =>
+      (IvfLayout(tenants = false, c), ivfTempRoot(s, dir, "_rc" + sfx))
     }
     // ONE coarse training for all three layouts (r17): they deploy
     // the SAME trajectory's quantizer (ivfLearned k=8 iters=2 — one
@@ -1859,13 +1777,9 @@ object Similarity extends QueryPack {
     // centroids and the memoized emb frame — overlap
     // them so one build's driver-side commit gaps back-fill with
     // another's tasks instead of serializing three write pipelines
-    graft.core.Par.all(s, Seq(
-      () => ivfServingSetup(s, dir, base + "f",
-        centsPre = Some(centsShared)),
-      () => ivfServingSetupSq8(s, dir, base + "s",
-        centsPre = Some(centsShared)),
-      () => ivfServingSetupPq(s, dir, base + "p",
-        centsPre = Some(centsShared))))
+    graft.core.Par.all(s, layouts.map { case (l, root) =>
+      () => l.build(s, dir, root, pre = Some(centsShared))
+    })
     val q0 = broadcast(emb.filter($"vec_id" === 0)
       .select(vec($"embedding").as("qv0")))
     // exact baseline consumed by all three sweeps — one corpus scan
@@ -1906,41 +1820,24 @@ object Similarity extends QueryPack {
           graft.core.Exact.dround(
             $"n_hits".cast("double") / lit(10.0), 6).as("recall"))
     }
-    val pf = prkOf(base + "f")
-    val scoredF = ivfRead(s, s"${base}f/index").filter($"vec_id" =!= 0)
-      .join(pf, "cell")
-      .select($"vec_id", $"cell", $"prk",
-        round(cosine(vec($"embedding"), $"qv"), 6).as("sc"))
-    val ps = prkOf(base + "s")
-    val scoredS = ivfRead(s, s"${base}s/index").filter($"vec_id" =!= 0)
-      .join(ps, "cell")
-      .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
-      .select($"vec_id", $"cell", $"prk",
-        round(cosine($"deq", $"qv"), 6).as("sc"))
+    // each layout's members (all cells) with their cell's rank, the
+    // query riding the k-row frame
+    def scanned(layout: (IvfLayout, String), cells: DataFrame): DataFrame =
+      layout._1.read(s, s"${layout._2}/index").filter($"vec_id" =!= 0)
+        .join(cells, "cell")
+    def scoredCos(layout: (IvfLayout, String)): DataFrame =
+      layout._1.withVec(scanned(layout, prkOf(layout._2)))
+        .select($"vec_id", $"cell", $"prk",
+          round(cosine($"mv", $"qv"), 6).as("sc"))
+    val scoredF = scoredCos(full)
+    val scoredS = scoredCos(sq8)
     // PQ: per-cell ADC tables for ALL cells (the sweep reaches
-    // nprobe = k), prk riding the table frame — pqStoredProbeCtx's
-    // arithmetic with the rank kept
-    val pp = prkOf(base + "p")
-    val mSlice = slice($"qres", $"m" * PqSubDim + 1, lit(PqSubDim))
-    val tabsP = broadcast(pp
-      .withColumn("qres", zip_with($"qv", $"centroid", (a, c) => a - c))
-      .crossJoin(
-        graft.core.Fs.readSidecar(s, s"${base}p/_books", BooksSchema))
-      .select($"cell", $"prk",
-        ($"m".cast("long") * lit(1000L) + $"cl").as("mk"),
-        (dot(mSlice, mSlice)
-          - lit(2.0) * dot(mSlice, $"cvec")
-          + dot($"cvec", $"cvec")).as("qd2"))
-      .groupBy($"cell", $"prk")
-      .agg(map_from_entries(collect_list(struct($"mk", $"qd2"))).as("tab")))
-    def cw(m: Int): Column = element_at($"code", m + 1).cast("long")
-    def look(m: Int): Column =
-      element_at($"tab", lit(m.toLong * 1000L) + cw(m))
-    val scoredP = ivfRead(s, s"${base}p/index").filter($"vec_id" =!= 0)
-      .join(tabsP, "cell")
+    // nprobe = k), prk kept as a table key
+    val scoredP = scanned((pq, rootP), pqTabs(prkOf(rootP),
+        graft.core.Fs.readSidecar(s, s"$rootP/_books", BooksSchema),
+        "cell", "prk"))
       .select($"vec_id", $"cell", $"prk",
-        graft.core.Exact.dround(
-          look(0) + look(1) + look(2) + look(3), 6).as("sc"))
+        graft.core.Exact.dround(pqAdcSum, 6).as("sc"))
     sweep(scoredF, asc = false, "full")
       .unionByName(sweep(scoredS, asc = false, "sq8"))
       .unionByName(sweep(scoredP, asc = true, "pq"))
@@ -2050,8 +1947,8 @@ object Similarity extends QueryPack {
     * checksum. The live set must be exactly "assignment minus
     * tombstones" — engine-replicable because the trajectory is q102's
     * integer-snapped Lloyd and the tombstone predicate is pure integer
-    * arithmetic. The FILE-level surface (ivfDelete / ivfReadLive /
-    * ivfCompact with pruning intact) is PipelineOpsSpec's half, the
+    * arithmetic. The FILE-level surface (ivfDelete / IvfLayout.readLive /
+    * IvfLayout.compact with pruning intact) is PipelineOpsSpec's half, the
     * q128 probe-vs-layout split.
     *
     * Scale shape: q128's training stages + ONE k-row census
@@ -2218,12 +2115,11 @@ object Similarity extends QueryPack {
     * residual/encode/ADC is one zero-shuffle projection per candidate
     * against broadcast tables (probed cells × 4 × ≤16 entries);
     * candidates are the probed cells' members only (partition-pruned
-    * under the ivfWrite layout). Top-10 rides TakeOrdered.
+    * under the stored layout). Top-10 rides TakeOrdered.
     */
   def q149AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = embCached(s, dir)
-    val SubDim = PqSubDim
     // q128's trajectory, trained once on the driver (ivfTrain): the
     // centroids are literal rows, so no downstream branch re-runs the
     // coarse training; withRes/booksAll feed 4-5 branches each and are
@@ -2237,8 +2133,6 @@ object Similarity extends QueryPack {
     // (pqTrainBooks — r17; was four independent chains, each its own
     // aggregation + eager checkpoint)
     val booksAll = pqTrainBooks(withRes).localCheckpoint()
-    val books = (0 until PqM).map(m =>
-      booksAll.filter($"m" === m).select($"cl", $"cvec"))
     val q = broadcast(emb.filter($"vec_id" === 0)
       .select(vec($"embedding").as("qv")))
     val probe = cents.crossJoin(q)
@@ -2247,19 +2141,9 @@ object Similarity extends QueryPack {
         + dot($"centroid", $"centroid"))
       .orderBy($"qd2".asc, $"cell".asc).limit(3)
       .select($"cell", $"centroid")
-    // per-(cell, m, codeword) ADC tables keyed m·1000+cl — the query's
-    // residual differs per cell; pqStoredProbeCtx's arithmetic in-query
-    val mSlice = slice($"qres", $"m" * SubDim + 1, lit(SubDim))
-    val tabs = broadcast(probe.crossJoin(q)
-      .withColumn("qres", zip_with($"qv", $"centroid", (a, c) => a - c))
-      .crossJoin(booksAll)
-      .select($"cell",
-        ($"m".cast("long") * lit(1000L) + $"cl").as("mk"),
-        (dot(mSlice, mSlice)
-          - lit(2.0) * dot(mSlice, $"cvec")
-          + dot($"cvec", $"cvec")).as("qd2"))
-      .groupBy($"cell")
-      .agg(map_from_entries(collect_list(struct($"mk", $"qd2"))).as("tab")))
+    // per-(cell, m, codeword) ADC tables — the query's residual
+    // differs per cell; the stored probe's arithmetic in-query
+    val tabs = pqTabs(probe.crossJoin(q), booksAll, "cell")
     // candidates = probed cells' members only (3-row broadcast join);
     // encode with the codegen'd per-subspace argmin and rank by the
     // fixed-order 4-term lookup sum — q197's stored-probe kernel
@@ -2268,7 +2152,7 @@ object Similarity extends QueryPack {
     // cl asc) ties, so codes and rankings are bit-identical)
     val base = withRes.filter($"vec_id" =!= 0)
       .join(broadcast(tabs.select($"cell")), "cell")
-    pqAdcRank(pqEncode(base, books), tabs, 10, None)
+    pqAdcRank(pqEncode(base, booksAll), tabs, 10)
   }
 
   // --- q197: stored IVF-PQ serving layout — PQ codes at rest, ADC off disk ---
@@ -2280,27 +2164,8 @@ object Similarity extends QueryPack {
   private[graft] val PqSubDim = 16
   private[graft] val PqK = 16
 
-  /** Build the FAISS-IVFx,PQy layout AT REST (r15 verdict #3 — the
-    * remaining at-rest parity term past q193's SQ8): the index stores
-    * (vec_id, code[4] as BYTES, cell) `partitionBy(cell)` — 4 bytes of
-    * member payload against SQ8's 72 (64 codes + scale) and
-    * full-precision's 256+, the 8–64× index-bytes win PQ exists for —
-    * plus sidecars: coarse centroids (`_cents`), the four residual
-    * codebooks (`_books`: m, cl, cvec — 64 rows total), and the query
-    * payload. Training replays q149's exact trajectory (q128's coarse
-    * chain, residuals, four q102-rule subspace trajectories on
-    * residual slices); the one-time ENCODE runs the codegen'd
-    * [[org.apache.spark.sql.graft.NearestCentroidExpr]] per subspace —
-    * bit-parity with q149's argmin rule (same composed-dot d2, same
-    * smallest-cl ties), so the stored codes are byte-identical to the
-    * ones q149 derives in-query.
-    *
-    * Scale shape: training is k-row stages; the encode is ONE
-    * zero-shuffle projection per vector against four broadcast packed
-    * codebook rows; the write is the ivfWrite partition layout.
-    */
   /** Residuals of an assigned frame against its cells' centroids —
-    * (vec_id, cell, res) from (vec_id, embedding, cell): one
+    * (vec_id, cell, res, extra…) from (vec_id, embedding, cell, …): one
     * projection, each row's centroid looked up in the quantizer's
     * rows (a literal map, k entries).
     */
@@ -2353,23 +2218,21 @@ object Similarity extends QueryPack {
         col(s"s$i").cast("double") / ($"n" * 1048576.0)): _*).as("cvec"))
   }
 
-  /** Encode residuals against the four FROZEN codebooks: per-subspace
-    * nearest codeword via the codegen'd NearestCentroidExpr — ONE
-    * broadcast carrying all four packed ≤16-row codebooks (pre-r17:
-    * four separate broadcasts, each a job), one projection, 4 bytes
-    * out per vector (cl ∈ 1..16 holds losslessly in a byte). `books`
-    * are the per-subspace (cl, cvec) frames in m-order. Encoding is a
-    * pure per-row function of (vector, frozen quantizers) — the
-    * property that makes retrain-free append ([[ivfAppendPq]]) exact.
+  /** Encode residuals against the four FROZEN codebooks (`books`:
+    * (m, cl, cvec) rows): per-subspace nearest codeword via the
+    * codegen'd NearestCentroidExpr — ONE broadcast carrying all four
+    * packed ≤16-row codebooks, one projection, 4 bytes out per vector
+    * (cl ∈ 1..16 holds losslessly in a byte). The argmin ties to the
+    * smallest cl, so codeword order inside a pack is immaterial.
+    * Encoding is a pure per-row function of (vector, frozen
+    * quantizers) — the property that makes retrain-free append exact.
     */
-  private def pqEncode(withRes: DataFrame, books: Seq[DataFrame],
+  private def pqEncode(withRes: DataFrame, books: DataFrame,
       extra: Seq[String] = Nil): DataFrame = {
     import withRes.sparkSession.implicits._
     def sl(c: Column, m: Int): Column = slice(c, m * PqSubDim + 1, PqSubDim)
-    val packed = broadcast(books.zipWithIndex.map { case (cb, m) =>
-      cb.select(lit(m).as("m"), struct($"cl", $"cvec").as("cw"))
-    }.reduce(_ unionByName _)
-      .groupBy($"m").agg(collect_list($"cw").as("cb"))
+    val packed = broadcast(books
+      .groupBy($"m").agg(collect_list(struct($"cl", $"cvec")).as("cb"))
       .agg(sort_array(collect_list(struct($"m", $"cb"))).as("cbs")))
     withRes.crossJoin(packed)
       .select(($"vec_id" +:
@@ -2380,302 +2243,127 @@ object Similarity extends QueryPack {
         extra.map(col) :+ $"cell"): _*)
   }
 
-  /** `memberFilter` restricts which vectors' CODES land in the stored
-    * index (default: all) — training always sees the full corpus, so
-    * a layout built over a subset and [[ivfAppendPq]]-completed equals
-    * the full build (the q198 frozen-quantizer arrival law, PQ side).
+  /** Per-cell ADC tables: the query's residual against each cell's
+    * centroid, one d2(q_m, codeword) entry per (m, codeword) keyed
+    * m·1000+cl — from a (cell, centroid, qv, keys…) frame and the
+    * (m, cl, cvec) codebook rows, one broadcast `tab` map per `keys`
+    * group (≤ cells·PqM·PqK entries). q149 builds them in-query, the
+    * stored probe from `_books`, q204 for every cell.
     */
-  def ivfServingSetupPq(s: SparkSession, dir: String, root: String,
-      memberFilter: Column = lit(true),
-      centsPre: Option[Quantizer] = None): Unit =
-    ivfBuildPq(s, dir, root, withTenants = false, memberFilter, centsPre)
-
-  /** The one PQ layout builder BOTH setups thread through (r16 advice:
-    * the tenant setup previously duplicated the full train/encode/
-    * sidecar chain except for the tb column): train the corpus-wide
-    * coarse quantizer + four residual codebooks, encode the member
-    * rows, write index + `_cents`/`_books`/`_query` sidecars. The
-    * tenant form carries `tb` (from `label`) through residuals/encode
-    * via their `extra` parameter — exactly how [[ivfAssign]] carries
-    * it — and partitions two-level `(tb, cell)`.
-    */
-  private def ivfBuildPq(s: SparkSession, dir: String, root: String,
-      withTenants: Boolean, memberFilter: Column = lit(true),
-      centsPre: Option[Quantizer] = None): Unit = {
-    import s.implicits._
-    val extra = if (withTenants) Seq("tb") else Nil
-    val emb = embCached(s, dir)
-    val q = centsPre.getOrElse(ivfTrain(emb, k = 8, iters = 2))
-    val idx = ivfAssign(emb, q,
-      (if (withTenants) Seq($"label".cast("long").as("tb")) else Nil): _*)
-    val withRes = pqResiduals(idx, q, extra).localCheckpoint()
-    // ONE exploded-subspace pass trains all four codebooks (r17 — was
-    // four chains, each its own aggregation + eager checkpoint)
-    val booksAll = pqTrainBooks(withRes).localCheckpoint()
-    val books = (0 until PqM).map(m =>
-      booksAll.filter($"m" === m).select($"cl", $"cvec"))
-    // two-level tenant trees hash-distribute (byParts scaladoc);
-    // single-level k=8 trees write direct — measured both ways
-    graft.core.Par.all(s, Seq(
-      () => pqEncode(withRes.filter(memberFilter), books, extra)
-        .transform(d =>
-          if (withTenants) byParts(d, extra :+ "cell": _*) else d)
-        .write.mode("overwrite").partitionBy(extra :+ "cell": _*)
-        .parquet(s"$root/index"),
-      () => q.frame(s).write.mode("overwrite").parquet(s"$root/_cents"),
-      () => booksAll.select($"m", $"cl", $"cvec")
-        .write.mode("overwrite").parquet(s"$root/_books"),
-      () => emb.filter($"vec_id" === 0)
-        .select(vec($"embedding").as("qv"))
-        .write.mode("overwrite").parquet(s"$root/_query")))
-  }
-
-  /** Retrain-free APPEND into the stored-PQ layout — FAISS's `add` on
-    * the at-rest form (the CRUD leg q139 gives the full-precision
-    * layout, for PQ): each new vector is assigned to its nearest
-    * FROZEN coarse centroid and its residual encoded against the
-    * FROZEN `_books` codebooks, then appended `partitionBy(cell)` —
-    * files created only under touched cells, probes stay pruned, and
-    * because both steps are pure per-row functions of the frozen
-    * quantizers, an appended layout is BYTE-IDENTICAL to a full
-    * rebuild over the union (q200's oracle law). Quantizer drift under
-    * sustained appends is the documented retrain trigger, exactly as
-    * [[ivfAppend]].
-    */
-  def ivfAppendPq(s: SparkSession, newEmb: DataFrame, root: String): Unit =
-    ivfAssignEncodePq(s, newEmb, root)
-      .write.mode("append").partitionBy("cell").parquet(s"$root/index")
-
-  /** Assign + encode NEW vectors against the layout's FROZEN
-    * quantizers — (vec_id, code, cell) from (vec_id, embedding): the
-    * k `_cents` rows collected to the driver (a literal) and one
-    * broadcast of the four ≤16-row `_books` packs, one zero-shuffle
-    * projection. The pure per-row kernel both the
-    * batch append ([[ivfAppendPq]]) and the streaming CRUD leg
-    * ([[graft.streaming.IvfMaintain.applyBatchPq]]) write — shared so
-    * a stored code is byte-identical whichever path landed it.
-    */
-  private[graft] def ivfAssignEncodePq(s: SparkSession, newEmb: DataFrame,
-      root: String): DataFrame = {
-    import s.implicits._
-    val q = ivfQuantizer(s, root)
-    val booksAll = graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema)
-    val books = (0 until PqM).map(m =>
-      booksAll.filter($"m" === m).select($"cl", $"cvec"))
-    pqEncode(pqResiduals(ivfAssign(newEmb, q), q), books)
-  }
-
-  // --- q201: multi-tenant × stored-PQ IVF (the composition matrix closed) ----
-  /** The tenant layout at the PQ compression point — completes the
-    * tenant × {full precision (q191), SQ8 (q195), PQ} matrix: one
-    * corpus-wide coarse quantizer and one set of residual codebooks,
-    * the index stored `partitionBy(tb, cell)` with 4-BYTE member
-    * payloads. A tenant's probe is a two-level statically-pruned scan
-    * whose per-candidate work is 4 table lookups; a tenant's purge is
-    * [[ivfPurgeTenant]] unchanged (payload-agnostic); compaction
-    * through the payload-agnostic [[ivfCompactTenants]] reclaims the
-    * tenant's `tb=` subtree of 4-byte codes. This is the smallest
-    * at-rest footprint a shared vector fleet can serve exact-ADC
-    * rankings from.
-    */
-  def ivfServingSetupTenantsPq(s: SparkSession, dir: String,
-      root: String): Unit =
-    ivfBuildPq(s, dir, root, withTenants = true)
-
-  /** One tenant's probe against the compressed-shared layout:
-    * [[ivfProbeStoredPq]]'s cell pick + per-cell ADC tables, the
-    * candidate scan pruned to `tb = tenant ∧ cell ∈ probed` (two
-    * levels), ranking by the fixed-order 4-term lookup sum — q149's
-    * rule restricted to the tenant's members. Tombstones honored
-    * through the payload-agnostic tenant live view.
-    */
-  def ivfProbeStoredTenantPq(s: SparkSession, root: String, tb: Long,
-      nprobe: Int = 3, k: Int = 10,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val (cells, tabs) = pqStoredProbeCtx(s, root, nprobe)
-    val base = ivfReadLiveTenants(s, s"$root/index")
-      .filter($"tb" === tb && $"cell".isin(cells: _*))
-    pqAdcRank(base, tabs, k, excludeVecId)
-  }
-
-  /** The stored-PQ probe CONTEXT — cell pick + per-cell ADC tables off
-    * the layout's sidecars, shared verbatim by the single-tenant and
-    * tenant probes (r16 advice: the ~25 duplicated lines could drift,
-    * e.g. a fix to the `mk` keying applied to one copy). Returns the
-    * bounded probed-cell list (the hotKeys class — a literal filter
-    * the partitioned scan prunes statically) and the broadcast
-    * ≤ nprobe·PqM·PqK-entry table frame. qv rides cellsDf so the
-    * `_query` sidecar is scanned ONCE per probe (scan-count gate).
-    */
-  private def pqStoredProbeCtx(s: SparkSession, root: String,
-      nprobe: Int): (Seq[Long], DataFrame) = {
-    import s.implicits._
-    val pick = ivfPickCells(s, root, nprobe)
+  private def pqTabs(cells: DataFrame, books: DataFrame,
+      keys: String*): DataFrame = {
+    import cells.sparkSession.implicits._
     val mSlice = slice($"qres", $"m" * PqSubDim + 1, lit(PqSubDim))
-    val tabs = broadcast(s.createDataFrame(
-        java.util.Arrays.asList(pick.picked: _*), CentsSchema)
-      .select($"cell", $"centroid", pick.qv.as("qv"))
+    broadcast(cells
       .withColumn("qres", zip_with($"qv", $"centroid", (a, c) => a - c))
-      .crossJoin(graft.core.Fs.readSidecar(s, s"$root/_books", BooksSchema))
-      .select($"cell",
+      .crossJoin(books)
+      .select(keys.map(col) ++ Seq(
         ($"m".cast("long") * lit(1000L) + $"cl").as("mk"),
         (dot(mSlice, mSlice)
           - lit(2.0) * dot(mSlice, $"cvec")
-          + dot($"cvec", $"cvec")).as("qd2"))
-      .groupBy($"cell")
+          + dot($"cvec", $"cvec")).as("qd2")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(map_from_entries(collect_list(struct($"mk", $"qd2"))).as("tab")))
-    (pick.cells, tabs)
   }
 
-  /** Rank stored-code candidates by the fixed-order 4-term ADC lookup
-    * sum (q149's b0+b1+b2+b3 spelling) — the shared tail of both
-    * stored-PQ probes: 4 map lookups per candidate, zero per-candidate
+  /** Stored code byte `m` as the table key's codeword part. */
+  private def pqCodeWord(m: Int): Column =
+    element_at(col("code"), m + 1).cast("long")
+
+  /** The ADC distance: the four table lookups keyed by the stored
+    * codes, added in fixed order (q149's b0+b1+b2+b3 spelling).
+    */
+  private def pqAdcSum: Column = (0 until PqM).map(m =>
+    element_at(col("tab"), lit(m.toLong * 1000L) + pqCodeWord(m))).reduce(_ + _)
+
+  /** Rank stored-code candidates by the ADC lookup sum against their
+    * cell's table — 4 map lookups per candidate, zero per-candidate
     * vector arithmetic.
     */
-  private def pqAdcRank(base: DataFrame, tabs: DataFrame, k: Int,
-      excludeVecId: Option[Long]): DataFrame = {
-    import base.sparkSession.implicits._
-    def cw(m: Int): Column = element_at($"code", m + 1).cast("long")
-    def look(m: Int): Column =
-      element_at($"tab", lit(m.toLong * 1000L) + cw(m))
-    excludeVecId.fold(base)(id => base.filter($"vec_id" =!= id))
-      .join(tabs, "cell")
-      .withColumn("adc_d2", look(0) + look(1) + look(2) + look(3))
-      .select($"vec_id", $"cell",
-        concat_ws("-", cw(0), cw(1), cw(2), cw(3)).as("code"),
-        graft.core.Exact.dround($"adc_d2", 6).as("adc_d2"))
-      .orderBy(graft.core.Exact.dround($"adc_d2", 6).asc, $"vec_id".asc)
+  private def pqAdcRank(cand: DataFrame, tabs: DataFrame, k: Int): DataFrame =
+    cand.join(tabs, "cell")
+      .withColumn("adc_d2", pqAdcSum)
+      .select(col("vec_id"), col("cell"),
+        concat_ws("-", (0 until PqM).map(pqCodeWord): _*).as("code"),
+        graft.core.Exact.dround(col("adc_d2"), 6).as("adc_d2"))
+      .orderBy(graft.core.Exact.dround(col("adc_d2"), 6).asc,
+        col("vec_id").asc)
       .limit(k)
-  }
 
+  // --- q201: multi-tenant × stored-PQ IVF (the composition matrix closed) ----
   /** Build + two tenants' probes over the compressed-shared PQ layout
-    * as one oracle row — q191's isolation law at the 4-byte
-    * compression point: each tenant's ADC ranking must equal q149's
-    * rule over its members alone (cell assignment AND codes are
-    * per-row functions, so neither product quantization nor co-tenancy
-    * can leak a neighbor's rows).
+    * as one oracle row — the tenant × {full (q191), SQ8 (q195), PQ}
+    * matrix closed at the 4-byte compression point: each tenant's ADC
+    * ranking must equal q149's rule over its members alone (cell
+    * assignment AND codes are per-row functions, so neither product
+    * quantization nor co-tenancy can leak a neighbor's rows).
     */
   def q201IvfTenantPq(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = ivfTempRoot(dir) + "_tpq"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupTenantsPq(s, dir, root)
-    IvfTenants.map { tb =>
-      ivfProbeStoredTenantPq(s, root, tb, excludeVecId = Some(0L))
-        .withColumn("tenant", lit(tb))
-    }.reduce(_ unionByName _)
-      .orderBy($"tenant".asc,
-        graft.core.Exact.dround($"adc_d2", 6).asc, $"vec_id".asc)
+    val layout = IvfLayout(tenants = true, IvfCodec.Pq)
+    val root = ivfTempRoot(s, dir, "_tpq")
+    layout.build(s, dir, root)
+    tenantProbes(s, layout, root)
   }
 
   /** Arrival-invariance of the stored-PQ layout under the oracle gate:
     * build the layout with only the FIRST half of the corpus as
     * members (quantizers trained on the full corpus — the frozen-
     * quantizer contract every retrain-free maintenance leg in this
-    * pack shares), [[ivfAppendPq]] the second half, probe — the answer
-    * must hash-equal q149/q197 (same oracle SQL verbatim): append is
-    * invisible to ranking because assignment and encoding are pure
-    * per-row functions of the frozen quantizers.
+    * pack shares), [[IvfLayout.append]] the second half, probe — the
+    * answer must hash-equal q149/q197 (same oracle SQL verbatim):
+    * append is invisible to ranking because assignment and encoding
+    * are pure per-row functions of the frozen quantizers.
     */
   def q200IvfPqAppend(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = ivfTempRoot(dir) + "_pqapp"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val layout = IvfLayout(tenants = false, IvfCodec.Pq)
+    val root = ivfTempRoot(s, dir, "_pqapp")
     val emb = embCached(s, dir)
-    // a 1-row bounded driver read (the setup's overwrite resets the
+    // a 1-row bounded driver read (the build's overwrite resets the
     // index, so bench reps never append-on-append)
     val splitV = emb.agg(floor(max($"vec_id") / 2).cast("long"))
       .as[Long].head()
-    ivfServingSetupPq(s, dir, root, memberFilter = col("vec_id") <= splitV)
-    ivfAppendPq(s,
-      emb.filter($"vec_id" > splitV).select($"vec_id", $"embedding"), root)
-    ivfProbeStoredPq(s, root, excludeVecId = Some(0L))
+    layout.build(s, dir, root, members = col("vec_id") <= splitV)
+    layout.append(s, root,
+      emb.filter($"vec_id" > splitV).select($"vec_id", $"embedding"))
+    layout.probe(s, root, excludeVecId = Some(0L))
   }
 
   // --- q202: stored-PQ layout built by the MAINTENANCE STREAM ------------------
-  /** The stored-PQ layout's streaming-CRUD leg under the oracle gate
-    * (r16 verdict #4 — the SQ8/PQ at-rest layouts had batch build +
-    * append but no streaming maintenance): train the coarse quantizer
-    * and residual codebooks once (sidecars written, index EMPTY), then
-    * let the whole corpus arrive as two CRUD micro-batches through
-    * [[graft.streaming.IvfMaintain.applyBatchPq]] — each batch one
-    * frozen-quantizer assign+encode projection staged and published
-    * exactly-once under [[graft.streaming.IngestCommit]] — and probe
-    * the stored 4-byte codes. The answer must hash-equal q149/q197
-    * (same oracle SQL verbatim): assignment AND encoding are pure
-    * per-row functions of the frozen quantizers, so arrival order,
-    * batch boundaries, and the staged-rename publish are all invisible
-    * to ADC rankings — the q198 arrival law at the 4-byte compression
-    * point.
+  /** The stored-PQ layout's streaming-CRUD leg under the oracle gate:
+    * train the coarse quantizer and residual codebooks once (sidecars
+    * written, index EMPTY), then let the whole corpus arrive as two
+    * CRUD micro-batches through [[graft.streaming.IvfMaintain.applyBatch]]
+    * — each batch one frozen-quantizer assign+encode projection staged
+    * and published exactly-once under [[graft.streaming.IngestCommit]]
+    * — and probe the stored 4-byte codes. The answer must hash-equal
+    * q149/q197 (same oracle SQL verbatim): assignment AND encoding are
+    * pure per-row functions of the frozen quantizers, so arrival
+    * order, batch boundaries, and the staged-rename publish are all
+    * invisible to ADC rankings — the q198 arrival law at the 4-byte
+    * compression point.
     *
     * Scale shape: per batch one zero-shuffle assign+encode projection
-    * (k-row `_cents` + 64-row `_books` broadcasts) + a staged write
-    * touching only the batch's cells, ≤|touched cells|+1 renames;
-    * probes stay nprobe-pruned scans of 4-byte codes. StreamingSpec
-    * adds the live twin (MemoryStream feed, stream == batch-built
-    * parity, tombstone dels, replay refusal).
+    * (k-row `_cents` literal + 64-row `_books` broadcast) + a staged
+    * write touching only the batch's cells, ≤|touched cells|+1
+    * renames; probes stay nprobe-pruned scans of 4-byte codes.
+    * StreamingSpec adds the live twin (MemoryStream feed, stream ==
+    * batch-built parity, tombstone dels, replay refusal).
     */
-  def q202IvfPqMaintain(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = ivfTempRoot(dir) + "_pqmaint"
-    // reset the committed pointer: a bench rep re-running this query
-    // must not have its batches refused as replays
-    graft.core.Fs.deleteRecursive(s, root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfBuildPq(s, dir, root, withTenants = false,
-      memberFilter = lit(false))
-    val emb = embCached(s, dir)
-    val half = broadcast(
-      emb.agg(floor(max($"vec_id") / 2).cast("long").as("split")))
-    val feed = emb.crossJoin(half)
-      .select(lit("add").as("op"), $"vec_id", $"embedding", $"split")
-    graft.streaming.IvfMaintain.applyBatchPq(
-      feed.filter($"vec_id" <= $"split").drop("split"), 0L, root)
-    graft.streaming.IvfMaintain.applyBatchPq(
-      feed.filter($"vec_id" > $"split").drop("split"), 1L, root)
-    ivfProbeStoredPq(s, root, excludeVecId = Some(0L))
-  }
+  def q202IvfPqMaintain(s: SparkSession, dir: String): DataFrame =
+    maintainedByStream(s, dir, IvfLayout(tenants = false, IvfCodec.Pq),
+      "_pqmaint")
 
-  /** The probe against the stored-PQ layout: [[ivfProbeStored]]'s cell
-    * pick from the broadcast coarse centroids, then per-(cell, m,
-    * codeword) ADC tables built from the `_books` sidecar and the
-    * query's PER-CELL residual (q149's tabs arithmetic verbatim —
-    * ≤ nprobe·4·16 broadcast entries), and each stored candidate's
-    * distance is the fixed-order 4-term table-lookup sum keyed by its
-    * stored bytes — the scanned cells' 4-byte codes are the ONLY
-    * member data read from disk; no vector arithmetic per candidate at
-    * all. Ranking is byte-identical to q149's in-query composition
-    * (same oracle SQL): at-rest product quantization is invisible to
-    * answers. Tombstones honored ([[ivfReadLive]]'s anti-join
-    * discipline).
+  /** The FAISS-IVFx,PQy layout at rest under the oracle gate: the
+    * index stores (vec_id, code[4] as BYTES, cell) — 4 bytes of member
+    * payload against SQ8's 72 and full-precision's 256+ — and training
+    * replays q149's exact trajectory, so probing the stored 4-byte
+    * codes must hash-equal q149 (same oracle SQL): at-rest product
+    * quantization is invisible to ranking, the q193 discipline at the
+    * PQ compression point.
     */
-  def ivfProbeStoredPq(s: SparkSession, root: String, nprobe: Int = 3,
-      k: Int = 10, excludeVecId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val (cells, tabs) = pqStoredProbeCtx(s, root, nprobe)
-    val idx = s.read.schema(PqIndexSchema).parquet(s"$root/index")
-      .filter($"cell".isin(cells: _*))
-    val live = ivfTombstones(s, s"$root/index").fold(idx)(t =>
-      idx.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    pqAdcRank(live, tabs, k, excludeVecId)
-  }
-
-  /** The stored-PQ layout under the oracle gate: build, then probe
-    * through the stored 4-byte codes — must hash-equal q149 (same
-    * oracle SQL), proving at-rest product quantization is invisible
-    * to ranking, the q193 discipline at the PQ compression point.
-    */
-  def q197IvfPqStored(s: SparkSession, dir: String): DataFrame = {
-    val root = ivfTempRoot(dir) + "_pq"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    ivfServingSetupPq(s, dir, root)
-    ivfProbeStoredPq(s, root, excludeVecId = Some(0L))
-  }
+  def q197IvfPqStored(s: SparkSession, dir: String): DataFrame =
+    storedProbe(s, dir, IvfLayout(tenants = false, IvfCodec.Pq), "_pq")
 
   // --- q151: PQ code-budget sweep -------------------------------------------
   /** The sweep a production PQ deployment runs before fixing a code
@@ -2876,7 +2564,7 @@ object Similarity extends QueryPack {
     * exact brute scan to the STORED IVF batch probe (r15 verdict #6 —
     * the recall-vs-cost point of the RAG path): the lexical leg is
     * unchanged (q164's pruned batch probe), the dense leg reads
-    * ≤nprobe cells per query off the persisted [[ivfServingSetup]]
+    * ≤nprobe cells per query off the persisted full-precision
     * layout instead of scanning the whole corpus, and fusion/packing
     * replay q166/q196's arithmetic verbatim. At 100 TB this is the
     * production shape — the exact dense leg is a full-corpus scan per
@@ -2893,19 +2581,16 @@ object Similarity extends QueryPack {
   def q199ContextPackApprox(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val root = ivfTempRoot(dir) + "_ctx"
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val root = ivfTempRoot(s, dir, "_ctx")
     // the two index BUILDS (IVF serving layout, q164's BM25 temp
     // layout) are independent one-off write pipelines — overlap them
     // so one build's driver-side commit gaps back-fill with the
     // other's tasks; the probes after the barrier are exactly q164's
     // batch probe + the stored IVF batch probe, unchanged
-    val bmPath = graft.operators.TextAnalysis.bm25TempIndexPath(dir)
-    val bp = new org.apache.hadoop.fs.Path(bmPath)
-    bp.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(bp)
+    val bmPath = graft.core.Fs.deleteOnExit(s,
+      graft.operators.TextAnalysis.bm25TempIndexPath(dir))
     graft.core.Par.all(s, Seq(
-      () => ivfServingSetup(s, dir, root),
+      () => FullLayout.build(s, dir, root),
       () => graft.operators.TextAnalysis.bm25IndexWrite(
         Tables.documents(s, dir), bmPath)))
     val wB = Window.partitionBy($"query_id")
@@ -3002,11 +2687,8 @@ object Similarity extends QueryPack {
   def quantizeInt8(emb: DataFrame): DataFrame = {
     import emb.sparkSession.implicits._
     val v = vec($"embedding")
-    val scale = (array_max(transform(v, x => abs(x))) / lit(127.0)).as("scale")
-    emb.select($"vec_id", $"label", v.as("v"), scale)
-      .withColumn("code", when($"scale" === 0.0,
-        transform($"v", _ => lit(0L)))
-        .otherwise(transform($"v", x => round(x / $"scale").cast("long"))))
+    emb.select($"vec_id", $"label", v.as("v"), int8Scale(v).as("scale"))
+      .withColumn("code", int8Code($"v", $"scale"))
       .withColumn("deq", transform($"code", c => c.cast("double") * $"scale"))
       .withColumn("err",
         dot($"v", $"v") - lit(2.0) * dot($"v", $"deq") + dot($"deq", $"deq"))

@@ -1588,7 +1588,7 @@ object TextAnalysis extends QueryPack {
 
   // --- q160: BM25 serving layout — bucketed inverted index + pruned probe ----
   /** Materialize the postings layout a lexical retrieval SERVICE
-    * actually reads — the IVF-serving story (q128/ivfWrite) applied to
+    * actually reads — the IVF-serving story (q128/the stored IvfLayout) applied to
     * text: one row per (term, doc) posting carrying tf, doc length and
     * lang, written partitionBy(tb) with tb = xxhash64(term) mod
     * `buckets`, so a q-term probe is a PARTITION-PRUNED scan of ≤q
@@ -1661,6 +1661,25 @@ object TextAnalysis extends QueryPack {
     * zero-token docs still count toward N (they have no postings but
     * q130's corpus stats include them).
     */
+  /** A BM25 layout's sidecar (`_docs`, `_stats`, `_tombstones`) read
+    * with the schema its writers use ([[graft.core.Fs.readSidecar]]: no
+    * inference job, no `_` root path for Spark's listing to ignore).
+    * The tenant layout's `_docs` and `_stats` carry `lang`; the
+    * single-tenant ones do not. Every writer — build, append, delete,
+    * purge and [[graft.streaming.IngestCommit]]'s staged publish —
+    * lands flat part files at the top of the directory.
+    */
+  private[graft] def bm25Sidecar(s: SparkSession, path: String, side: String,
+      tenants: Boolean = false): DataFrame =
+    graft.core.Fs.readSidecar(s, s"$path/$side",
+      org.apache.spark.sql.types.StructType.fromDDL(side match {
+        case "_tombstones" => "doc_id BIGINT"
+        case "_docs" if tenants => "doc_id BIGINT, lang STRING, dl BIGINT"
+        case "_docs" => "doc_id BIGINT, dl BIGINT"
+        case "_stats" if tenants => "lang STRING, nd BIGINT, tl BIGINT"
+        case "_stats" => "nd BIGINT, tl BIGINT"
+      }))
+
   private def bm25DocLens(tokenized: DataFrame): DataFrame = {
     import tokenized.sparkSession.implicits._
     tokenized.select($"doc_id", $"dl")
@@ -1692,8 +1711,8 @@ object TextAnalysis extends QueryPack {
         .write.mode("overwrite").parquet(s"$path/_stats")))
   }
 
-  /** Incremental postings APPEND — the ivfAppend story
-    * (graft.operators.Similarity.ivfAppend) on the lexical layout: a
+  /** Incremental postings APPEND — the stored-IVF append story
+    * (graft.operators.Similarity.IvfLayout.append) on the lexical layout: a
     * new crawl batch's postings land under the buckets its terms hash
     * to (parquet append creates files only under touched `tb=`
     * dirs — untouched buckets' files are never rewritten), the
@@ -1767,11 +1786,11 @@ object TextAnalysis extends QueryPack {
     val addLens = bm25DocLens(tokenized)
     addLens.write.mode("overwrite").parquet(s"$stagingRoot/docs")
     val liveNow = {
-      val prior = s.read.parquet(s"$path/_docs")
+      val prior = bm25Sidecar(s, path, "_docs")
       val all =
         if (!graft.core.Fs.exists(s, s"$path/_tombstones")) prior
         else prior.join(
-          broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+          broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
           Seq("doc_id"), "left_anti")
       all.unionByName(addLens)
     }
@@ -1821,11 +1840,11 @@ object TextAnalysis extends QueryPack {
     val liveNow = {
       val prior =
         if (!graft.core.Fs.exists(s, s"$path/_docs")) addLens.limit(0)
-        else s.read.parquet(s"$path/_docs")
+        else bm25Sidecar(s, path, "_docs", tenants = true)
       val all =
         if (!graft.core.Fs.exists(s, s"$path/_tombstones")) prior
         else prior.join(
-          broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+          broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
           Seq("doc_id"), "left_anti")
       all.unionByName(addLens)
     }
@@ -1856,11 +1875,11 @@ object TextAnalysis extends QueryPack {
   def bm25Delete(ids: DataFrame, path: String): Unit = {
     val s = ids.sparkSession
     import s.implicits._
-    val docs = s.read.parquet(s"$path/_docs")
+    val docs = bm25Sidecar(s, path, "_docs")
     val live =
       if (!graft.core.Fs.exists(s, s"$path/_tombstones")) docs
       else docs.join(
-        broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+        broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
         Seq("doc_id"), "left_anti")
     // consumed twice (tombstone write + stats delta): checkpoint so
     // the _docs join runs once
@@ -1874,7 +1893,7 @@ object TextAnalysis extends QueryPack {
       .write.mode("append").parquet(s"$path/_stats")
   }
 
-  /** Fold tombstones into the files — ivfCompact on the lexical
+  /** Fold tombstones into the files — IvfLayout.compact on the lexical
     * layout: rewrite the LIVE postings as a fresh layout at `dest`
     * (no `_tombstones`, `_docs` pruned, `_stats` collapsed to one
     * exact row). Written to a NEW root; the caller swaps serving
@@ -1886,7 +1905,7 @@ object TextAnalysis extends QueryPack {
     graft.core.Fs.deleteRecursive(s, dest)
     val tomb =
       if (!graft.core.Fs.exists(s, s"$path/_tombstones")) None
-      else Some(broadcast(s.read.parquet(s"$path/_tombstones").distinct()))
+      else Some(broadcast(bm25Sidecar(s, path, "_tombstones").distinct()))
     def live(df: DataFrame): DataFrame =
       tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
     live(s.read.parquet(path))
@@ -1895,9 +1914,9 @@ object TextAnalysis extends QueryPack {
       .withColumn("tb", col("tb").cast("long"))
       .transform(byBuckets)
       .write.mode("overwrite").partitionBy("tb").parquet(dest)
-    live(s.read.parquet(s"$path/_docs"))
+    live(bm25Sidecar(s, path, "_docs"))
       .write.mode("overwrite").parquet(s"$dest/_docs")
-    s.read.parquet(s"$dest/_docs")
+    bm25Sidecar(s, dest, "_docs")
       .agg(count(lit(1)).as("nd"), sum($"dl").as("tl"))
       .write.mode("overwrite").parquet(s"$dest/_stats")
   }
@@ -1907,7 +1926,7 @@ object TextAnalysis extends QueryPack {
     * collapse `_stats` to one exact row PER TENANT. A fully purged
     * tenant has no live rows, so its `lang=` subtree simply does not
     * exist in the compacted layout — erasure's bytes reclaimed, the
-    * lexical twin of ivfCompactTenants' rule (its stats rows vanish
+    * lexical twin of the tenant IvfLayout.compact rule (its stats rows vanish
     * with it; a probe of a vanished tenant is the empty frame, q180's
     * contract).
     */
@@ -1917,16 +1936,16 @@ object TextAnalysis extends QueryPack {
     graft.core.Fs.deleteRecursive(s, dest)
     val tomb =
       if (!graft.core.Fs.exists(s, s"$path/_tombstones")) None
-      else Some(broadcast(s.read.parquet(s"$path/_tombstones").distinct()))
+      else Some(broadcast(bm25Sidecar(s, path, "_tombstones").distinct()))
     def live(df: DataFrame): DataFrame =
       tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
     live(s.read.parquet(path))
       .withColumn("tb", col("tb").cast("long"))
       .transform(byBuckets)
       .write.mode("overwrite").partitionBy("lang", "tb").parquet(dest)
-    live(s.read.parquet(s"$path/_docs"))
+    live(bm25Sidecar(s, path, "_docs", tenants = true))
       .write.mode("overwrite").parquet(s"$dest/_docs")
-    s.read.parquet(s"$dest/_docs")
+    bm25Sidecar(s, dest, "_docs", tenants = true)
       .groupBy($"lang")
       .agg(count(lit(1)).as("nd"), sum($"dl").as("tl"))
       .write.mode("overwrite").parquet(s"$dest/_stats")
@@ -1961,11 +1980,11 @@ object TextAnalysis extends QueryPack {
     val postBase = s.read.parquet(path)
       .filter($"tb".isin(tbs: _*) && $"tok".isin(terms: _*))
     // live view: tombstoned docs drop out BEFORE df/idf, so a probe
-    // equals a rebuild-without-those-docs (the ivfReadLive discipline;
+    // equals a rebuild-without-those-docs (the IvfLayout.readLive discipline;
     // the anti-join sits above the pruned scan, pruning intact)
     if (!graft.core.Fs.exists(s, s"$path/_tombstones")) postBase
     else postBase.join(
-      broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+      broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
       Seq("doc_id"), "left_anti")
   }
 
@@ -1975,7 +1994,7 @@ object TextAnalysis extends QueryPack {
     val k1 = 1.2; val b = 0.75
     // `_stats` is append-delta structured (build row + one row per
     // append/delete): the live corpus stats are the SUM of the rows
-    val stats = broadcast(s.read.parquet(s"$path/_stats")
+    val stats = broadcast(bm25Sidecar(s, path, "_stats")
       .agg(sum($"nd").as("nd"), sum($"tl").as("tl")))
     // lazily checkpointed: the live postings feed BOTH the df/idf pass
     // and the scoring pass — without reuse the pruned scan (and the
@@ -2025,7 +2044,7 @@ object TextAnalysis extends QueryPack {
     val qt = broadcast(
       queryTerms.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
         .toDF("query_id", "tok"))
-    val stats = broadcast(s.read.parquet(s"$path/_stats")
+    val stats = broadcast(bm25Sidecar(s, path, "_stats")
       .agg(sum($"nd").as("nd"), sum($"tl").as("tl")))
     // same one-scan reuse as bm25Probe: the live postings feed df/idf
     // AND the scoring fan-out (pruned to the UNION of all queries'
@@ -2068,10 +2087,8 @@ object TextAnalysis extends QueryPack {
     * replays (each with its own term list).
     */
   def q164Bm25BatchProbe(s: SparkSession, dir: String): DataFrame = {
-    val path = bm25TempIndexPath(dir)
+    val path = graft.core.Fs.deleteOnExit(s, bm25TempIndexPath(dir))
     bm25IndexWrite(Tables.documents(s, dir), path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     bm25ProbeBatch(s, path, Bm25Batch)
   }
 
@@ -2086,9 +2103,8 @@ object TextAnalysis extends QueryPack {
     */
   def q169DedupTakedown(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = bm25TempIndexPath(dir) + "_takedown"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_takedown")
     val docs = Tables.documents(s, dir)
     bm25IndexWrite(docs, path)
     val keepers = docs.withColumn("fp", md5($"text"))
@@ -2125,7 +2141,7 @@ object TextAnalysis extends QueryPack {
     import s.implicits._
     val c = corpus.select($"doc_id", $"lang".as("c_lang"),
       lit(1L).as("in_c"))
-    val i = s.read.parquet(s"$indexPath/_docs")
+    val i = bm25Sidecar(s, indexPath, "_docs", tenants = true)
       .select($"doc_id", $"lang".as("i_lang"), lit(1L).as("in_i"))
     c.join(i, Seq("doc_id"), "full_outer")
       .select(coalesce($"c_lang", $"i_lang").as("lang"),
@@ -2141,9 +2157,8 @@ object TextAnalysis extends QueryPack {
 
   def q182IndexFreshness(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = bm25TempIndexPath(dir) + "_fresh"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_fresh")
     val docs = Tables.documents(s, dir)
     val half = broadcast(
       docs.agg(floor(max($"doc_id") / 2).cast("long").as("split")))
@@ -2180,9 +2195,8 @@ object TextAnalysis extends QueryPack {
   def q188HardNegatives(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val path = bm25TempIndexPath(dir) + "_negmine"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_negmine")
     bm25IndexWrite(Tables.documents(s, dir), path)
     val queries = Bm25Batch.filter(q => q._1 == 1L || q._1 == 2L)
     // k=10 explicitly: the oracle's LIMIT 10 encodes this contract —
@@ -2223,7 +2237,7 @@ object TextAnalysis extends QueryPack {
     * dead_frac ≥ `threshold` (the policy knob; compaction cost is a
     * full rewrite, so fleets trigger at 10–30% dead). Composes the
     * q162 (bm25) and q158 (ivf) maintenance parts into the decision
-    * row that schedules [[bm25Compact]] / Similarity.ivfCompact.
+    * row that schedules [[bm25Compact]] / Similarity.IvfLayout.compact.
     *
     * Scale shape: one scan + one broadcast tombstone join per layout
     * (tombstone sets are bounded by deletes-since-compaction — the
@@ -2252,9 +2266,9 @@ object TextAnalysis extends QueryPack {
     val bm25Tombs = s"$bm25Path/_tombstones"
     leg("bm25", s.read.parquet(bm25Path), "doc_id",
         if (!graft.core.Fs.exists(s, bm25Tombs)) None
-        else Some(s.read.parquet(bm25Tombs).distinct()))
-      .unionByName(leg("ivf", s.read.parquet(ivfIndexPath), "vec_id",
-        Similarity.ivfTombstones(s, ivfIndexPath)))
+        else Some(bm25Sidecar(s, bm25Path, "_tombstones").distinct()))
+      .unionByName(leg("ivf", Similarity.FullLayout.read(s, ivfIndexPath),
+        "vec_id", Similarity.ivfTombstones(s, ivfIndexPath)))
       .orderBy($"layout".asc)
   }
 
@@ -2274,7 +2288,7 @@ object TextAnalysis extends QueryPack {
       if (!graft.core.Fs.exists(s, tombPath))
         base.withColumn("is_dead", lit(0L))
       else base.join(
-        broadcast(s.read.parquet(tombPath).distinct()
+        broadcast(bm25Sidecar(s, path, "_tombstones").distinct()
           .withColumn("is_dead", lit(1L))),
         Seq("doc_id"), "left")
     flagged
@@ -2294,12 +2308,8 @@ object TextAnalysis extends QueryPack {
     */
   def q172CompactionCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val bmPath = bm25TempIndexPath(dir) + "_census"
-    val ivfRoot = bm25TempIndexPath(dir) + "_ivfcensus"
-    Seq(bmPath, ivfRoot).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    }
+    val Seq(bmPath, ivfRoot) = Seq("_census", "_ivfcensus").map(sfx =>
+      graft.core.Fs.deleteOnExit(s, bm25TempIndexPath(dir) + sfx))
     val docs = Tables.documents(s, dir)
     bm25IndexWrite(docs, bmPath)
     bm25Delete(docs.filter($"doc_id" % 7 === 3).select($"doc_id"), bmPath)
@@ -2309,7 +2319,7 @@ object TextAnalysis extends QueryPack {
     // sidecars are written (nothing probes this layout)
     val emb = Tables.embeddings(s, dir).localCheckpoint(false)
     val (idx, _) = Similarity.ivfLearned(emb, k = 8, iters = 1)
-    Similarity.ivfWrite(idx, s"$ivfRoot/index")
+    Similarity.FullLayout.write(idx, s"$ivfRoot/index")
     Similarity.ivfDelete(
       emb.filter($"vec_id" % 7 === 3).select($"vec_id"),
       s"$ivfRoot/index")
@@ -2430,7 +2440,7 @@ object TextAnalysis extends QueryPack {
     // the 1-row stats frame feeds idf AND scoring — checkpoint it so
     // the sidecar is scanned once per tenant, not once per consumer
     // (the q175 union of two tenant probes read _stats 4x without it)
-    val stats = broadcast(s.read.parquet(s"$path/_stats")
+    val stats = broadcast(bm25Sidecar(s, path, "_stats", tenants = true)
       .filter($"lang" === lang)
       .agg(sum($"nd").as("nd"), sum($"tl").as("tl"))
       .localCheckpoint(false))
@@ -2441,7 +2451,7 @@ object TextAnalysis extends QueryPack {
     val postPruned = bm25TenantPostings(s, path, lang, terms, buckets, tbs)
     val post = (if (!graft.core.Fs.exists(s, s"$path/_tombstones")) postPruned
       else postPruned.join(
-        broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+        broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
         Seq("doc_id"), "left_anti"))
       .localCheckpoint(false)
     val idf = broadcast(post.groupBy($"tok")
@@ -2490,9 +2500,8 @@ object TextAnalysis extends QueryPack {
     */
   def q175TenantProbe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = bm25TempIndexPath(dir) + "_tenants"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_tenants")
     bm25IndexWriteTenants(Tables.documents(s, dir), path)
     TenantLangs.map { lang =>
       bm25ProbeTenant(s, path, lang, Bm25Query)
@@ -2544,8 +2553,7 @@ object TextAnalysis extends QueryPack {
     // reset the committed pointer: a bench rep re-running this query
     // must not have its batches refused as replays
     graft.core.Fs.deleteRecursive(s, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    graft.core.Fs.deleteOnExit(s, path)
     val docs = Tables.documents(s, dir)
     val half = broadcast(
       docs.agg(floor(max($"doc_id") / 2).cast("long").as("split")))
@@ -2592,11 +2600,12 @@ object TextAnalysis extends QueryPack {
     */
   def bm25PurgeTenant(s: SparkSession, path: String, lang: String): Unit = {
     import s.implicits._
-    val docs = s.read.parquet(s"$path/_docs").filter($"lang" === lang)
+    val docs = bm25Sidecar(s, path, "_docs", tenants = true)
+      .filter($"lang" === lang)
     val live =
       if (!graft.core.Fs.exists(s, s"$path/_tombstones")) docs
       else docs.join(
-        broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+        broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
         Seq("doc_id"), "left_anti")
     live.select($"doc_id")
       .write.mode("append").parquet(s"$path/_tombstones")
@@ -2604,7 +2613,8 @@ object TextAnalysis extends QueryPack {
     // the 1-row read happens strictly before the append (a bounded
     // driver materialization, never data-sized), so the same path is
     // never read and written in one job
-    val net = s.read.parquet(s"$path/_stats").filter($"lang" === lang)
+    val net = bm25Sidecar(s, path, "_stats", tenants = true)
+      .filter($"lang" === lang)
       .agg(coalesce(sum($"nd"), lit(0L)).as("nd"),
         coalesce(sum($"tl"), lit(0L)).as("tl"))
       .as[(Long, Long)].head()
@@ -2632,18 +2642,20 @@ object TextAnalysis extends QueryPack {
     import s.implicits._
     graft.streaming.IngestCommit.applyStaged(s, path, opId,
       Seq("tomb" -> "_tombstones", "stats" -> "_stats"), staged => {
-        val docs = s.read.parquet(s"$path/_docs").filter($"lang" === lang)
+        val docs = bm25Sidecar(s, path, "_docs", tenants = true)
+      .filter($"lang" === lang)
         val live =
           if (!graft.core.Fs.exists(s, s"$path/_tombstones")) docs
           else docs.join(
-            broadcast(s.read.parquet(s"$path/_tombstones").distinct()),
+            broadcast(bm25Sidecar(s, path, "_tombstones").distinct()),
             Seq("doc_id"), "left_anti")
         live.select($"doc_id")
           .write.mode("overwrite").parquet(s"$staged/tomb")
         // the bm25PurgeTenant delta rule: negate the tenant's net
         // stats as the sidecar records them (1-row bounded read,
         // strictly before the staged write)
-        val net = s.read.parquet(s"$path/_stats").filter($"lang" === lang)
+        val net = bm25Sidecar(s, path, "_stats", tenants = true)
+      .filter($"lang" === lang)
           .agg(coalesce(sum($"nd"), lit(0L)).as("nd"),
             coalesce(sum($"tl"), lit(0L)).as("tl"))
           .as[(Long, Long)].head()
@@ -2666,9 +2678,8 @@ object TextAnalysis extends QueryPack {
     */
   def q180TenantPurge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = bm25TempIndexPath(dir) + "_purge"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_purge")
     bm25IndexWriteTenants(Tables.documents(s, dir), path)
     bm25PurgeTenantAtomic(s, path, TenantLangs(1),
       graft.streaming.IngestCommit.committed(s, path) + 1L)
@@ -2704,8 +2715,7 @@ object TextAnalysis extends QueryPack {
     import s.implicits._
     val base = bm25TempIndexPath(dir) + "_swap"
     graft.core.Fs.deleteRecursive(s, base)
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    graft.core.Fs.deleteOnExit(s, base)
     val docs = Tables.documents(s, dir)
     bm25IndexWrite(docs, s"$base/gen0")
     graft.core.Roots.publish(s, base, "gen0")
@@ -2740,18 +2750,16 @@ object TextAnalysis extends QueryPack {
 
   /** One DETERMINISTIC temp root per corpus dir: every invocation
     * (3+ bench reps per round) overwrites the same layout instead of
-    * leaking a fresh corpus-sized index per rep, and the Hadoop
-    * deleteOnExit below reclaims it at JVM shutdown.
+    * leaking a fresh corpus-sized index per rep, and each caller's
+    * [[graft.core.Fs.deleteOnExit]] reclaims it at JVM shutdown.
     */
   def bm25TempIndexPath(dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_bm25idx_${
       java.lang.Integer.toHexString(dir.hashCode)}"
 
   def q160Bm25Probe(s: SparkSession, dir: String): DataFrame = {
-    val path = bm25TempIndexPath(dir)
+    val path = graft.core.Fs.deleteOnExit(s, bm25TempIndexPath(dir))
     bm25IndexWrite(Tables.documents(s, dir), path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     bm25Probe(s, path, Bm25Query)
   }
 
@@ -2775,9 +2783,8 @@ object TextAnalysis extends QueryPack {
     */
   def q162Bm25Maintain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = bm25TempIndexPath(dir) + "_maint"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    val path = graft.core.Fs.deleteOnExit(s,
+      bm25TempIndexPath(dir) + "_maint")
     val docs = Tables.documents(s, dir)
     val half = broadcast(
       docs.agg(floor(max($"doc_id") / 2).cast("long").as("split")))

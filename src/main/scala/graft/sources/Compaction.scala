@@ -56,8 +56,8 @@ object Compaction {
     * 8 before, and the change is not measured), so a 2,000-partition
     * index doesn't serialize into 2,000 sequential jobs. A failed leaf
     * cancels its siblings' jobs and the call returns once every leaf's
-    * driver thread has ended; a killed write task can outlive the
-    * call until it notices the kill. Only the FS walk is driver-side.
+    * driver thread and every cancelled write task has ended. Only the
+    * FS walk is driver-side.
     *
     * Returns (relative partition path, target file count) per leaf.
     */

@@ -69,7 +69,7 @@ object Bm25Maintain {
       .start()
 
   /** [[applyBatch]] for the MULTI-TENANT layout (r16 verdict #5 — the
-    * lexical twin of [[IvfMaintain.applyBatchTenants]]): one
+    * lexical twin of [[IvfMaintain.applyBatch]] on a tenant layout): one
     * (op, doc_id, lang, text) micro-batch against the shared
     * `partitionBy(lang, tb)` layout — adds stage under the batch's own
     * (tenant, bucket) dirs with per-tenant stats deltas, dels are
@@ -90,19 +90,6 @@ object Bm25Maintain {
         path, staged))
   }
 
-  /** The tenant maintenance loop — one stream serving every tenant of
-    * the shared layout ([[IvfMaintain.ivfMaintainStreamTenants]]'s
-    * single-writer rule on the lexical side).
-    */
-  def bm25MaintainStreamTenants(feed: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    feed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchTenants(batch, batchId, path); ()
-      }
-      .start()
-
   /** The cheap compaction TRIGGER for the managed stream: fraction of
     * tombstoned docs over all indexed docs — two doc-cardinality
     * counts off the sidecars, never a postings scan. A doc-count
@@ -113,9 +100,11 @@ object Bm25Maintain {
     */
   def deadDocFrac(s: SparkSession, path: String): Double = {
     if (!graft.core.Fs.exists(s, s"$path/_tombstones")) return 0.0
-    val docs = s.read.parquet(s"$path/_docs")
+    // doc_id and dl are in both layout shapes' `_docs`
+    val docs = graft.operators.TextAnalysis.bm25Sidecar(s, path, "_docs")
     val dead = docs.join(
-      s.read.parquet(s"$path/_tombstones").distinct(),
+      graft.operators.TextAnalysis.bm25Sidecar(s, path, "_tombstones")
+        .distinct(),
       Seq("doc_id"), "left_semi").count()
     val total = docs.count()
     if (total == 0L) 0.0 else dead.toDouble / total.toDouble
@@ -180,8 +169,8 @@ object Bm25Maintain {
     * ([[graft.operators.TextAnalysis.bm25CompactTenants]]): a fully
     * purged tenant's `lang=` subtree and stats rows vanish with the
     * generation flip — erasure's bytes reclaimed by the same swap
-    * machinery, the lexical twin of
-    * [[IvfMaintain.compactAndSwapTenants]]. Pointer carried so replay
+    * machinery, the lexical twin of [[IvfMaintain.compactAndSwap]] on
+    * a tenant layout. Pointer carried so replay
     * protection survives the flip.
     */
   def compactAndSwapTenants(s: SparkSession, base: String,

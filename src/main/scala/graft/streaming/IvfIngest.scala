@@ -3,14 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Similarity.FullLayout
+
 /** LIVE IVF index maintenance — the dense twin of [[Bm25Ingest]],
   * completing the serving-lifecycle matrix (both layouts now have
   * build → streaming ingest → delete → compact → probe legs): a stream
   * of new embeddings appends into an existing
-  * [[graft.operators.Similarity.ivfServingSetup]] layout. Each vector
-  * is assigned to its nearest FROZEN centroid (the retrain-free
-  * [[graft.operators.Similarity.ivfAssignNew]] contract — bit-parity
-  * with what a rebuild would assign), staged `partitionBy(cell)`, and
+  * full-precision single-tenant [[graft.operators.Similarity.IvfLayout]].
+  * Each vector is assigned to its nearest FROZEN centroid (the
+  * retrain-free [[graft.operators.Similarity.IvfLayout.encode]]
+  * contract — bit-parity with what a rebuild would assign), staged
+  * `partitionBy(cell)`, and
   * published into `root/index` under the [[IngestCommit]] protocol, so
   * a probe between batches serves base+ingested vectors alike through
   * the same ≤nprobe-cell pruned scan.
@@ -21,14 +24,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Hadoop FileSystem API (IngestCommit's scaladoc has the crash
   * analysis and the S3 rename caveat). Centroid drift under sustained
   * ingest is the documented retrain trigger, exactly as for batch
-  * [[graft.operators.Similarity.ivfAppend]].
+  * [[graft.operators.Similarity.IvfLayout.append]].
   *
   * Scale shape: per micro-batch, ONE zero-shuffle assignment
   * projection against the broadcast k-row centroid table + a
   * batch-sized staged write + ≤|touched cells| renames; untouched
   * cells' files are never rewritten and the serving read never sees
   * the staging dir. StreamingSpec pins probe-after-stream == rebuild
-  * (ivfAppend of the same rows), replay refusal, and crash-retry ==
+  * (a batch append of the same rows), replay refusal, and crash-retry ==
   * clean-run end state.
   */
 object IvfIngest {
@@ -47,14 +50,11 @@ object IvfIngest {
   def applyBatch(batch: DataFrame, batchId: Long, root: String): Boolean = {
     val s = batch.sparkSession
     IngestCommit.applyStaged(s, index(root), batchId, Artifacts, staged =>
-      graft.operators.Similarity
-        .ivfAssign(batch, graft.operators.Similarity.ivfQuantizer(s, root))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$staged/post"))
+      FullLayout.write(FullLayout.encode(s, root, batch), s"$staged/post"))
   }
 
   /** Start the ingest loop over a streaming (vec_id, embedding) frame
-    * into the serving layout at `root` (built by ivfServingSetup).
+    * into the serving layout at `root` (a full-precision layout build).
     * Caller supplies the checkpoint dir.
     */
   def ivfIngestStream(emb: DataFrame, root: String,

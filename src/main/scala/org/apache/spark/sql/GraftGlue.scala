@@ -10,4 +10,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftGlue {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every listener event posted so far has been handled —
+    * after it, the status tracker has seen every job submitted before
+    * the call.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -91,16 +91,17 @@ class ParSpec extends SparkTestBase {
         },
         // a task that runs until it is killed (or a minute has passed)
         () => spark.range(0, 1, 1, 1).rdd.foreachPartition { _ =>
-          while (!TaskContext.get().isInterrupted() &&
+          ParSpec.taskRunning.set(true)
+          try while (!TaskContext.get().isInterrupted() &&
               System.currentTimeMillis() < deadline) Thread.sleep(10)
+          finally { Thread.sleep(300); ParSpec.taskRunning.set(false) }
         }))
     }
     assert(started.getCount == 0)
-    val t0 = System.currentTimeMillis()
-    while (sc.statusTracker.getActiveJobIds.nonEmpty &&
-        System.currentTimeMillis() - t0 < 20000) Thread.sleep(20)
+    // Par.all returns only after the cancelled job and its task ended
     assert(sc.statusTracker.getActiveJobIds.isEmpty,
       "the sibling's job was not cancelled")
+    assert(!ParSpec.taskRunning.get, "the sibling's task was still running")
     assert(System.currentTimeMillis() < deadline - 30000)
   }
 
@@ -155,7 +156,7 @@ class ParSpec extends SparkTestBase {
                 System.currentTimeMillis() < deadline)
               try Thread.sleep(10) catch { case _: InterruptedException => }
             killed.set(TaskContext.get().isInterrupted())
-          } finally ended.set(true)
+          } finally { Thread.sleep(300); ended.set(true) }
           throw new java.io.IOException("sibling write stopped")
         case p if p.contains("rel=bad") =>
           started.await(); throw new java.io.IOException("leaf failed")
@@ -166,10 +167,14 @@ class ParSpec extends SparkTestBase {
           s"hookfs://$out", targetMB = 1)
       }
     }
-    // the kill reaches the task asynchronously (ParSpec's job case)
-    val t0 = System.currentTimeMillis()
-    while (!ended.get && System.currentTimeMillis() - t0 < 20000) Thread.sleep(20)
+    // compactPartitioned returns only after the killed task ended
+    assert(ended.get, "the sibling leaf's write task was still running")
     assert(killed.get, "the sibling leaf's write was not cancelled")
     assert(System.currentTimeMillis() < deadline - 30000)
   }
+}
+
+object ParSpec {
+  /** Set while the job case's task runs (tasks run in this JVM). */
+  val taskRunning = new AtomicBoolean(false)
 }

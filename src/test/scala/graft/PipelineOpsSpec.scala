@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   */
 class PipelineOpsSpec extends SparkTestBase {
 
+  import Similarity.{IvfCodec, IvfLayout}
+  private val FullIvf = IvfLayout(tenants = false, IvfCodec.Full)
+  private val Sq8Ivf = IvfLayout(tenants = false, IvfCodec.Sq8)
+  private val PqIvf = IvfLayout(tenants = false, IvfCodec.Pq)
+  private val TenantIvf = IvfLayout(tenants = true, IvfCodec.Full)
+  private val TenantPqIvf = IvfLayout(tenants = true, IvfCodec.Pq)
+
   test("minhash LSH finds the token-set-identical pairs") {
     // sf0.001 documents contain pairs with identical token SETS
     // (reordered near-duplicates): jaccard 1.0 must surface
@@ -1574,12 +1581,12 @@ class PipelineOpsSpec extends SparkTestBase {
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val (idx, _) = Similarity.ivfLearned(emb, k = 8, iters = 2)
     val tmp = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Similarity.ivfWrite(idx, tmp)
+    FullIvf.write(idx, tmp)
     val cellsOnDisk = new java.io.File(tmp).listFiles
       .count(_.getName.startsWith("cell="))
     assert(cellsOnDisk >= 4, s"expected several cell dirs, got $cellsOnDisk")
     val probe = Seq(1L, 2L, 3L)
-    val probed = Similarity.ivfRead(spark, tmp)
+    val probed = FullIvf.read(spark, tmp)
       .filter(col("cell").isin(probe: _*))
     // pruning reaches the scan logically...
     val plan = probed.queryExecution.executedPlan.toString
@@ -1613,25 +1620,25 @@ class PipelineOpsSpec extends SparkTestBase {
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val (idx, _) = Similarity.ivfLearned(emb, k = 8, iters = 2)
     val tmp = java.nio.file.Files.createTempDirectory("ivfdel").toString
-    Similarity.ivfWrite(idx, tmp)
+    FullIvf.write(idx, tmp)
     val all = idx.select("vec_id").collect().map(_.getLong(0)).toSet
     val dead = all.filter(_ % 7 == 3)
     assert(dead.nonEmpty && dead.size < all.size)
     import spark.implicits._
     Similarity.ivfDelete(dead.toSeq.toDF("vec_id"), tmp)
     // base read is untouched (the _ prefix hides the tombstone dir)
-    val baseIds = Similarity.ivfRead(spark, tmp)
+    val baseIds = FullIvf.read(spark, tmp)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(baseIds == all, "ivfRead of the base layout must not change")
     // live read = all minus tombstones
-    val liveIds = Similarity.ivfReadLive(spark, tmp)
+    val liveIds = FullIvf.readLive(spark, tmp)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(liveIds == (all -- dead),
       s"live read must exclude exactly the tombstoned ids")
     // probe parity after delete: probed-cell content equals the
     // in-memory index restriction minus the dead set...
     val probe = Seq(1L, 2L, 3L)
-    val probed = Similarity.ivfReadLive(spark, tmp)
+    val probed = FullIvf.readLive(spark, tmp)
       .filter(col("cell").isin(probe: _*))
     probed.collect()
     val a = probed.select("vec_id").collect().map(_.getLong(0)).sorted
@@ -1664,13 +1671,13 @@ class PipelineOpsSpec extends SparkTestBase {
         s"files, probed dirs hold $filesInProbedDirs")
     // compaction physically drops the dead rows and the tombstone dir
     val dest = java.nio.file.Files.createTempDirectory("ivfcomp").toString
-    Similarity.ivfCompact(spark, tmp, dest)
-    val compIds = Similarity.ivfRead(spark, dest)
+    FullIvf.compact(spark, tmp, dest)
+    val compIds = FullIvf.read(spark, dest)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(compIds == (all -- dead))
     assert(!new java.io.File(s"$dest/_tombstones").exists())
     // idempotent serving: live read of the compacted root is identical
-    val compLive = Similarity.ivfReadLive(spark, dest)
+    val compLive = FullIvf.readLive(spark, dest)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(compLive == compIds)
   }
@@ -1742,8 +1749,8 @@ class PipelineOpsSpec extends SparkTestBase {
     "and honors tombstones") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("ivfsrv").toString
-    Similarity.ivfServingSetup(spark, sfDir, root)
-    val probe = Similarity.ivfProbeStored(spark, root,
+    FullIvf.build(spark, sfDir, root)
+    val probe = FullIvf.probe(spark, root,
       excludeVecId = Some(0L))
     val got = probe.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1768,7 +1775,7 @@ class PipelineOpsSpec extends SparkTestBase {
     // tombstoning the top hit removes it from the served answer
     val topId = got.head._1
     Similarity.ivfDelete(Seq(topId).toDF("vec_id"), s"$root/index")
-    val afterDelete = Similarity.ivfProbeStored(spark, root,
+    val afterDelete = FullIvf.probe(spark, root,
       excludeVecId = Some(0L)).collect().map(_.getLong(0)).toSeq
     assert(!afterDelete.contains(topId))
     spark.catalog.clearCache()
@@ -3232,18 +3239,22 @@ class PipelineOpsSpec extends SparkTestBase {
     val base = emb.filter($"vec_id" <= split)
     val delta = emb.filter($"vec_id" > split)
     val (idx, cents) = Similarity.ivfLearned(base, k = 8, iters = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("ivfappend").toString
-    Similarity.ivfWrite(idx, tmp)
+    val root = java.nio.file.Files.createTempDirectory("ivfappend").toString
+    val tmp = s"$root/index"
+    FullIvf.write(idx, tmp)
+    cents.write.parquet(s"$root/_cents")
+    def assignNew(e: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfAssign(e, Similarity.Quantizer.of(cents))
     def fileMap(): Map[String, Set[String]] = new java.io.File(tmp).listFiles
       .filter(_.getName.startsWith("cell="))
       .map(d => d.getName -> d.listFiles.map(_.getName)
         .filter(_.endsWith(".parquet")).toSet).toMap
     val before = fileMap()
-    Similarity.ivfAppend(delta, cents, tmp)
+    FullIvf.append(spark, root, delta)
     val after = fileMap()
     // file-level physics: cells the batch assigns into gained files;
     // every other cell's file set is BYTE-UNTOUCHED (no rewrite)
-    val touched = Similarity.ivfAssignNew(delta, cents)
+    val touched = assignNew(delta)
       .select($"cell").distinct().collect().map(r => s"cell=${r.getLong(0)}").toSet
     assert(touched.nonEmpty)
     touched.foreach { c =>
@@ -3257,11 +3268,11 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // merged layout == base index + frozen-centroid assignment, row
     // for row (vec_id -> cell)
-    val merged = Similarity.ivfRead(spark, tmp)
+    val merged = FullIvf.read(spark, tmp)
       .select($"vec_id", $"cell").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     val expected = (idx.select($"vec_id", $"cell").collect() ++
-      Similarity.ivfAssignNew(delta, cents)
+      assignNew(delta)
         .select($"vec_id", $"cell").collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(merged.sameElements(expected),
@@ -3270,8 +3281,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // union, and the scan stays partition-pruned to the probed cells
     val q = emb.filter($"vec_id" === 0)
       .selectExpr("cast(embedding as array<double>)").head().getSeq[Double](0)
-    val onDisk = Similarity.ivfRead(spark, tmp).filter($"vec_id" =!= 0)
-    val inMem = idx.unionByName(Similarity.ivfAssignNew(delta, cents))
+    val onDisk = FullIvf.read(spark, tmp).filter($"vec_id" =!= 0)
+    val inMem = idx.unionByName(assignNew(delta))
       .filter($"vec_id" =!= 0)
     def top(ix: org.apache.spark.sql.DataFrame) =
       Similarity.ivfSearch(ix, cents, q, nprobe = 3, topK = 10)
@@ -3308,7 +3319,7 @@ class PipelineOpsSpec extends SparkTestBase {
     val ivfRoot = java.nio.file.Files
       .createTempDirectory("ivfcensus").toString
     TextAnalysis.bm25IndexWrite(docs, path)
-    graft.operators.Similarity.ivfServingSetup(spark, sfDir, ivfRoot)
+    FullIvf.build(spark, sfDir, ivfRoot)
     val ivfIdx = s"$ivfRoot/index"
     // fresh layouts: no tombstones -> 0 dead everywhere, compact_now=0
     val fresh = TextAnalysis.compactionCensus(spark, path, ivfIdx, 0.10)
@@ -3350,7 +3361,7 @@ class PipelineOpsSpec extends SparkTestBase {
     "tenant's live view idempotently; compaction drops its subtree") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("ivften").toString
-    Similarity.ivfServingSetupTenants(spark, sfDir, root)
+    TenantIvf.build(spark, sfDir, root)
     val idxDir = new java.io.File(s"$root/index")
     val tbDirs = idxDir.listFiles.filter(_.getName.startsWith("tb="))
     assert(tbDirs.length >= 3, s"expected several tenant dirs, got ${tbDirs.length}")
@@ -3364,7 +3375,7 @@ class PipelineOpsSpec extends SparkTestBase {
         + expr("aggregate(zip_with(centroid, centroid, (a,b) -> a*b), 0d, (s,x) -> s+x)"))
       .orderBy(col("qd2").asc, col("cell").asc).limit(3)
       .select("cell").collect().map(_.getLong(0)).toSeq
-    val probe = Similarity.ivfProbeStoredTenant(spark, root, 0L,
+    val probe = TenantIvf.probe(spark, root, Some(0L),
       excludeVecId = Some(0L))
     val before = probe.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -3379,7 +3390,7 @@ class PipelineOpsSpec extends SparkTestBase {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(allScans)
     }
-    val probed2 = Similarity.ivfProbeStoredTenant(spark, root, 0L,
+    val probed2 = TenantIvf.probe(spark, root, Some(0L),
       excludeVecId = Some(0L))
     probed2.collect()
     val scan = allScans(probed2.queryExecution.executedPlan).find(f =>
@@ -3397,33 +3408,33 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(filesTotal > filesInProbed,
       "two-level pruning must exclude other tenants' and cells' files")
     // purge tenant 1: live view empties, base files untouched
-    val t1All = Similarity.ivfReadTenants(spark, s"$root/index")
+    val t1All = TenantIvf.read(spark, s"$root/index")
       .filter(col("tb") === 1L).count()
     assert(t1All > 0)
-    Similarity.ivfPurgeTenant(spark, root, 1L)
-    assert(Similarity.ivfReadLiveTenants(spark, s"$root/index")
+    TenantIvf.purge(spark, root, 1L)
+    assert(TenantIvf.readLive(spark, s"$root/index")
       .filter(col("tb") === 1L).count() == 0L,
       "purged tenant must have an empty live view")
-    assert(Similarity.ivfReadTenants(spark, s"$root/index")
+    assert(TenantIvf.read(spark, s"$root/index")
       .filter(col("tb") === 1L).count() == t1All,
       "purge must not rewrite base files (logical-now, physical-at-compaction)")
     // idempotence: a re-run (crash recovery) appends zero tombstones
     val tombs = spark.read.parquet(s"$root/index/_tombstones").count()
-    Similarity.ivfPurgeTenant(spark, root, 1L)
+    TenantIvf.purge(spark, root, 1L)
     assert(spark.read.parquet(s"$root/index/_tombstones").count() == tombs,
       "purge re-run must append nothing")
     // survivor unaffected
-    val after = Similarity.ivfProbeStoredTenant(spark, root, 0L,
+    val after = TenantIvf.probe(spark, root, Some(0L),
       excludeVecId = Some(0L)).collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(after == before, "survivor's ranking must survive the purge")
     // compaction drops the purged tenant's whole subtree
     val dest = java.nio.file.Files.createTempDirectory("ivftenc").toString
-    Similarity.ivfCompactTenants(spark, s"$root/index", dest)
+    TenantIvf.compact(spark, s"$root/index", dest)
     assert(!new java.io.File(s"$dest/tb=1").exists(),
       "a fully purged tenant must have no dirs in the compacted generation")
     assert(new java.io.File(s"$dest/tb=0").exists())
-    assert(Similarity.ivfReadTenants(spark, dest)
+    assert(TenantIvf.read(spark, dest)
       .filter(col("tb") === 1L).count() == 0L)
   }
 
@@ -3432,10 +3443,10 @@ class PipelineOpsSpec extends SparkTestBase {
     "smaller on disk than the full-precision layout") {
     val rootF = java.nio.file.Files.createTempDirectory("ivffull").toString
     val rootQ = java.nio.file.Files.createTempDirectory("ivfsq8").toString
-    Similarity.ivfServingSetup(spark, sfDir, rootF)
-    Similarity.ivfServingSetupSq8(spark, sfDir, rootQ)
+    FullIvf.build(spark, sfDir, rootF)
+    Sq8Ivf.build(spark, sfDir, rootQ)
     // ranking parity with the in-query composition (the oracle's law)
-    val got = Similarity.ivfProbeStoredSq8(spark, rootQ,
+    val got = Sq8Ivf.probe(spark, rootQ,
       excludeVecId = Some(0L)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val expect = Similarity.q136AnnIvfSq8(spark, sfDir).collect()
@@ -3463,7 +3474,7 @@ class PipelineOpsSpec extends SparkTestBase {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(allScans)
     }
-    val probed = Similarity.ivfProbeStoredSq8(spark, rootQ,
+    val probed = Sq8Ivf.probe(spark, rootQ,
       excludeVecId = Some(0L))
     probed.collect()
     val scan = allScans(probed.queryExecution.executedPlan).find(f =>
@@ -3532,7 +3543,7 @@ class PipelineOpsSpec extends SparkTestBase {
       }
     val root = java.nio.file.Files.createTempDirectory("ivfsq8lloyd").toString
     val (_, rounds) = plansIn(lloyd) {
-      Similarity.ivfServingSetupSq8(spark, sfDir, root)
+      Sq8Ivf.build(spark, sfDir, root)
     }
     assert(rounds == 1, s"the Lloyd aggregation ran $rounds times")
   }
@@ -3557,7 +3568,7 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(got.size == n, s"$root nprobe=$n picked ${got.size}")
     }
     val stored = java.nio.file.Files.createTempDirectory("ivfpick").toString
-    Similarity.ivfServingSetup(spark,
+    FullIvf.build(spark,
       new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath,
       stored)
     check(stored, 8)
@@ -3584,12 +3595,12 @@ class PipelineOpsSpec extends SparkTestBase {
     val rootF = java.nio.file.Files.createTempDirectory("pqfull").toString
     val rootS = java.nio.file.Files.createTempDirectory("pqsq8").toString
     val rootP = java.nio.file.Files.createTempDirectory("pqpq").toString
-    Similarity.ivfServingSetup(spark, sfDir, rootF)
-    Similarity.ivfServingSetupSq8(spark, sfDir, rootS)
-    Similarity.ivfServingSetupPq(spark, sfDir, rootP)
+    FullIvf.build(spark, sfDir, rootF)
+    Sq8Ivf.build(spark, sfDir, rootS)
+    PqIvf.build(spark, sfDir, rootP)
     // ranking parity with the in-query composition (the oracle's law):
     // code string AND rounded ADC distance, row for row in order
-    val got = Similarity.ivfProbeStoredPq(spark, rootP,
+    val got = PqIvf.probe(spark, rootP,
       excludeVecId = Some(0L)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getDouble(3))).toSeq
@@ -3622,7 +3633,7 @@ class PipelineOpsSpec extends SparkTestBase {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(allScans)
     }
-    val probed = Similarity.ivfProbeStoredPq(spark, rootP,
+    val probed = PqIvf.probe(spark, rootP,
       excludeVecId = Some(0L))
     probed.collect()
     val scan = allScans(probed.queryExecution.executedPlan).find(f =>
@@ -3638,7 +3649,7 @@ class PipelineOpsSpec extends SparkTestBase {
     import spark.implicits._
     Similarity.ivfDelete(Seq(expect.head._1).toDF("vec_id"),
       s"$rootP/index")
-    val after = Similarity.ivfProbeStoredPq(spark, rootP,
+    val after = PqIvf.probe(spark, rootP,
       excludeVecId = Some(0L)).collect().map(_.getLong(0)).toSeq
     assert(!after.contains(expect.head._1))
     assert(after.take(5) == expect.map(_._1).filterNot(_ == expect.head._1)
@@ -3650,16 +3661,16 @@ class PipelineOpsSpec extends SparkTestBase {
     "unservable, its tb= subtree gone after the rewrite") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("tpq").toString
-    Similarity.ivfServingSetupTenantsPq(spark, sfDir, root)
+    TenantPqIvf.build(spark, sfDir, root)
     val survivor = Similarity.IvfTenants.head
     val purged = Similarity.IvfTenants(1)
     def probe(r: String, tb: Long) =
-      Similarity.ivfProbeStoredTenantPq(spark, r, tb,
+      TenantPqIvf.probe(spark, r, Some(tb),
         excludeVecId = Some(0L)).collect()
         .map(x => (x.getLong(0), x.getString(2), x.getDouble(3))).toSeq
     val before = probe(root, survivor)
     assert(before.nonEmpty)
-    Similarity.ivfPurgeTenant(spark, root, purged)
+    TenantPqIvf.purge(spark, root, purged)
     assert(probe(root, purged).isEmpty,
       "purged tenant must be unservable immediately")
     assert(probe(root, survivor) == before,
@@ -3667,7 +3678,7 @@ class PipelineOpsSpec extends SparkTestBase {
     // the r15-advice fix under test: compaction of a NON-embedding
     // payload (4-byte codes) through the payload-agnostic rewrite
     val dest = java.nio.file.Files.createTempDirectory("tpq2").toString
-    Similarity.ivfCompactTenants(spark, s"$root/index", s"$dest/index")
+    TenantPqIvf.compact(spark, s"$root/index", s"$dest/index")
     Seq("_cents", "_books", "_query").foreach { side =>
       spark.read.parquet(s"$root/$side")
         .write.mode("overwrite").parquet(s"$dest/$side")
@@ -3680,27 +3691,49 @@ class PipelineOpsSpec extends SparkTestBase {
       "compaction must be invisible to the survivor's ranking")
   }
 
-  test("ivfAppendPq: a half-built-then-appended PQ layout is " +
-    "byte-identical to the full build — every vec_id's stored code " +
-    "and cell agree") {
+  test("stored IVF layouts, all six (tenants x codec): a half build " +
+    "plus encode-append equals the full build row for row, a deleted " +
+    "vec_id is hidden, compaction leaves the live view unchanged") {
     import spark.implicits._
-    val rootA = java.nio.file.Files.createTempDirectory("pqfullb").toString
-    val rootB = java.nio.file.Files.createTempDirectory("pqapp").toString
-    Similarity.ivfServingSetupPq(spark, sfDir, rootA)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val splitV = emb.agg(floor(max($"vec_id") / 2).cast("long"))
       .as[Long].head()
-    Similarity.ivfServingSetupPq(spark, sfDir, rootB,
-      memberFilter = col("vec_id") <= splitV)
-    Similarity.ivfAppendPq(spark,
-      emb.filter($"vec_id" > splitV).select($"vec_id", $"embedding"), rootB)
-    def layout(root: String) = spark.read.parquet(s"$root/index")
-      .select($"vec_id", concat_ws("-", $"code"), $"cell".cast("long"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    val a = layout(rootA); val b = layout(rootB)
-    assert(a.nonEmpty && a == b,
-      "appended layout diverges from the full build")
+    val rest = emb.filter($"vec_id" > splitV)
+      .select($"vec_id", $"embedding", $"label".cast("long").as("tb"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case x => x
+      })
+    def live(l: IvfLayout, path: String) =
+      rows(l.readLive(spark, path)).sortBy(_.head.asInstanceOf[Long])
+    assert(IvfLayout.all.size == 6)
+    IvfLayout.all.foreach { l =>
+      val tb = Option.when(l.tenants)(Similarity.IvfTenants.head)
+      val full = java.nio.file.Files.createTempDirectory("lfull").toString
+      val half = java.nio.file.Files.createTempDirectory("lhalf").toString
+      l.build(spark, sfDir, full)
+      l.build(spark, sfDir, half, members = col("vec_id") <= splitV)
+      l.append(spark, half, rest)
+      def probe(root: String) = rows(l.probe(spark, root, tb,
+        excludeVecId = Some(0L)))
+      val expect = probe(full)
+      assert(expect.nonEmpty, l.name)
+      assert(probe(half) == expect, s"${l.name}: half build + append " +
+        "probes differently from the full build")
+      assert(live(l, s"$half/index") == live(l, s"$full/index"),
+        s"${l.name}: appended members differ from the full build's")
+      val victim = expect.head.head.asInstanceOf[Long]
+      Similarity.ivfDelete(Seq(victim).toDF("vec_id"), s"$half/index")
+      assert(!probe(half).map(_.head).contains(victim), l.name)
+      val liveBefore = live(l, s"$half/index")
+      assert(!liveBefore.map(_.head).contains(victim), l.name)
+      val dest = java.nio.file.Files.createTempDirectory("lcomp").toString
+      l.compact(spark, s"$half/index", s"$dest/index")
+      assert(!new java.io.File(s"$dest/index/_tombstones").exists(), l.name)
+      assert(live(l, s"$dest/index") == liveBefore,
+        s"${l.name}: compaction changed the live view")
+    }
   }
 
   test("ivfProbeAt: a probe pinned to a retired-but-retained generation " +
@@ -3708,15 +3741,15 @@ class PipelineOpsSpec extends SparkTestBase {
     "it fails loudly") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("ivfgen").toString
-    Similarity.ivfServingSetup(spark, sfDir, s"$base/gen0")
+    FullIvf.build(spark, sfDir, s"$base/gen0")
     graft.core.Roots.publish(spark, base, "gen0")
-    def probeCur() = Similarity.ivfProbeStored(spark,
+    def probeCur() = FullIvf.probe(spark,
       graft.core.Roots.current(spark, base), excludeVecId = Some(0L))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val preSwap = probeCur()
     assert(preSwap.nonEmpty)
     // next generation: same build minus the pre-swap winner (a takedown)
-    Similarity.ivfServingSetup(spark, sfDir, s"$base/gen1")
+    FullIvf.build(spark, sfDir, s"$base/gen1")
     Similarity.ivfDelete(Seq(preSwap.head._1).toDF("vec_id"),
       s"$base/gen1/index")
     graft.core.Roots.publish(spark, base, "gen1")

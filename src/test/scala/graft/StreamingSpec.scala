@@ -7,6 +7,11 @@ import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkTestBase {
 
+  import graft.operators.Similarity.{IvfCodec, IvfLayout}
+  private val FullIvf = IvfLayout(tenants = false, IvfCodec.Full)
+  private val TenantIvf = IvfLayout(tenants = true, IvfCodec.Full)
+  private val PqIvf = IvfLayout(tenants = false, IvfCodec.Pq)
+
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
 
   test("corpus filters are pure projections: the SAME batch transform + " +
@@ -1836,8 +1841,8 @@ class StreamingSpec extends SparkTestBase {
     implicit val sc = spark.sqlContext
     val rootA = java.nio.file.Files.createTempDirectory("ivfmntA").toString
     val rootB = java.nio.file.Files.createTempDirectory("ivfmntB").toString
-    Similarity.ivfServingSetup(spark, sfDir, rootA)
-    Similarity.ivfServingSetup(spark, sfDir, rootB)
+    FullIvf.build(spark, sfDir, rootA)
+    FullIvf.build(spark, sfDir, rootB)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val maxId = emb.agg(max($"vec_id")).head().getLong(0)
     val addsDf = emb.filter($"vec_id" % 5 === 1)
@@ -1852,20 +1857,19 @@ class StreamingSpec extends SparkTestBase {
     val feed = adds ++ dels
     val ckpt = java.nio.file.Files.createTempDirectory("ivfmnt_ck").toString
     val input = MemoryStream[(String, Long, Seq[Float])]
-    val q = IvfMaintain.ivfMaintainStream(
+    val q = IvfMaintain.ivfMaintainStream(FullIvf,
       input.toDF().toDF("op", "vec_id", "embedding"), rootA, ckpt)
     try feed.grouped(feed.size / 4 + 1).foreach { s =>
       input.addData(s); q.processAllAvailable()
     } finally q.stop()
     // control: batch append + delete against the identical twin layout
-    Similarity.ivfAppend(addsDf,
-      spark.read.parquet(s"$rootB/_cents"), s"$rootB/index")
+    FullIvf.append(spark, rootB, addsDf)
     Similarity.ivfDelete(delsDf, s"$rootB/index")
-    def probe(root: String) = Similarity.ivfProbeStored(spark, root,
+    def probe(root: String) = FullIvf.probe(spark, root,
       excludeVecId = Some(0L)).collect().toSeq
     assert(probe(rootA) == probe(rootB),
       "probe after CRUD stream diverges from batch append+delete")
-    def live(root: String) = Similarity.ivfReadLive(spark, s"$root/index")
+    def live(root: String) = FullIvf.readLive(spark, s"$root/index")
       .groupBy($"cell").agg(count(lit(1)).as("n"), sum($"vec_id").as("sv"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
@@ -1874,7 +1878,7 @@ class StreamingSpec extends SparkTestBase {
     val committed = IvfMaintain.committedBatch(spark, rootA)
     assert(committed >= 0L)
     val before = live(rootA)
-    assert(!IvfMaintain.applyBatch(
+    assert(!IvfMaintain.applyBatch(FullIvf,
       Seq(("del", 2L, Seq.empty[Float]))
         .toDF("op", "vec_id", "embedding"),
       committed, rootA), "replay must be refused")
@@ -1891,7 +1895,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.IvfMaintain
     implicit val sc = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("ivfmng").toString
-    Similarity.ivfServingSetup(spark, sfDir, s"$base/gen0")
+    FullIvf.build(spark, sfDir, s"$base/gen0")
     Roots.publish(spark, base, "gen0")
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val maxId = emb.agg(max($"vec_id")).head().getLong(0)
@@ -1905,7 +1909,7 @@ class StreamingSpec extends SparkTestBase {
       delsDf.as[Long].collect().toSeq.map(id => ("del", id, Seq.empty[Float]))
     val ckpt = java.nio.file.Files.createTempDirectory("ivfmng_ck").toString
     val input = MemoryStream[(String, Long, Seq[Float])]
-    val q = IvfMaintain.ivfMaintainStreamManaged(
+    val q = IvfMaintain.ivfMaintainStreamManaged(FullIvf,
       input.toDF().toDF("op", "vec_id", "embedding"), base, ckpt,
       compactAt = 0.10)
     val nBatches = {
@@ -1919,11 +1923,10 @@ class StreamingSpec extends SparkTestBase {
     // control: batch-maintained twin (append + delete, no compaction —
     // compaction must be answer-invariant)
     val ctrl = java.nio.file.Files.createTempDirectory("ivfmngc").toString
-    Similarity.ivfServingSetup(spark, sfDir, ctrl)
-    Similarity.ivfAppend(addsDf,
-      spark.read.parquet(s"$ctrl/_cents"), s"$ctrl/index")
+    FullIvf.build(spark, sfDir, ctrl)
+    FullIvf.append(spark, ctrl, addsDf)
     Similarity.ivfDelete(delsDf, s"$ctrl/index")
-    def probe(root: String) = Similarity.ivfProbeStored(spark, root,
+    def probe(root: String) = FullIvf.probe(spark, root,
       excludeVecId = Some(0L)).collect().toSeq
     assert(probe(Roots.current(spark, base)) == probe(ctrl),
       "managed ivf stream diverges from the batch-maintained control")
@@ -1966,7 +1969,7 @@ class StreamingSpec extends SparkTestBase {
       .map { case (_, id, _, tb) => ("del", id, Seq.empty[Float], tb) }
     val ckpt = java.nio.file.Files.createTempDirectory("ivftmnt_ck").toString
     val input = MemoryStream[(String, Long, Seq[Float], Long)]
-    val q = IvfMaintain.ivfMaintainStreamManagedTenants(
+    val q = IvfMaintain.ivfMaintainStreamManaged(TenantIvf,
       input.toDF().toDF("op", "vec_id", "embedding", "tb"), base, ckpt,
       compactAt = 0.05)
     val feed = adds.grouped(adds.size / 3 + 1).toSeq :+ purgeDels
@@ -1985,10 +1988,10 @@ class StreamingSpec extends SparkTestBase {
     assert(tbDirs.contains(s"tb=${Similarity.IvfTenants.head}"))
     // batch control: the one-shot tenant layout, same purge batch-side
     val ctrl = java.nio.file.Files.createTempDirectory("ivftmntc").toString
-    Similarity.ivfServingSetupTenants(spark, sfDir, ctrl)
-    Similarity.ivfPurgeTenant(spark, ctrl, purged)
+    TenantIvf.build(spark, sfDir, ctrl)
+    TenantIvf.purge(spark, ctrl, purged)
     def probe(root: String, tb: Long) =
-      Similarity.ivfProbeStoredTenant(spark, root, tb,
+      TenantIvf.probe(spark, root, Some(tb),
         excludeVecId = Some(0L)).collect().toSeq
     Similarity.IvfTenants.foreach { tb =>
       assert(probe(cur, tb) == probe(ctrl, tb),
@@ -2000,14 +2003,14 @@ class StreamingSpec extends SparkTestBase {
     // the layout untouched
     val committed = IvfMaintain.committedBatch(spark, cur)
     assert(committed == feed.size - 1L)
-    val before = Similarity.ivfReadLiveTenants(spark, s"$cur/index")
+    val before = TenantIvf.readLive(spark, s"$cur/index")
       .groupBy($"tb").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(!IvfMaintain.applyBatchTenants(
+    assert(!IvfMaintain.applyBatch(TenantIvf,
       Seq(("add", 999999L, Seq.fill(64)(0.5f), 0L))
         .toDF("op", "vec_id", "embedding", "tb"),
       committed, cur), "replay must be refused")
-    assert(Similarity.ivfReadLiveTenants(spark, s"$cur/index")
+    assert(TenantIvf.readLive(spark, s"$cur/index")
       .groupBy($"tb").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       == before)
@@ -2026,8 +2029,7 @@ class StreamingSpec extends SparkTestBase {
     val base = java.nio.file.Files.createTempDirectory("ivfpqmnt").toString
     // gen0: frozen quantizers + sidecars only, EMPTY index — the
     // whole corpus arrives through the stream
-    Similarity.ivfServingSetupPq(spark, sfDir, s"$base/gen0",
-      memberFilter = lit(false))
+    PqIvf.build(spark, sfDir, s"$base/gen0", members = lit(false))
     Roots.publish(spark, base, "gen0")
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val adds = emb.select($"vec_id", $"embedding")
@@ -2037,7 +2039,7 @@ class StreamingSpec extends SparkTestBase {
     val dels = victims.map(id => ("del", id, Seq.empty[Float]))
     val ckpt = java.nio.file.Files.createTempDirectory("ivfpq_ck").toString
     val input = MemoryStream[(String, Long, Seq[Float])]
-    val q = IvfMaintain.ivfMaintainStreamManagedPq(
+    val q = IvfMaintain.ivfMaintainStreamManaged(PqIvf,
       input.toDF().toDF("op", "vec_id", "embedding"), base, ckpt,
       compactAt = 0.05)
     val feed = adds.grouped(adds.size / 3 + 1).toSeq :+ dels
@@ -2054,10 +2056,10 @@ class StreamingSpec extends SparkTestBase {
       "compaction must fold tombstones away")
     // batch control: full build, then the same victims batch-deleted
     val ctrl = java.nio.file.Files.createTempDirectory("ivfpqmc").toString
-    Similarity.ivfServingSetupPq(spark, sfDir, ctrl)
+    PqIvf.build(spark, sfDir, ctrl)
     Similarity.ivfDelete(victims.toDF("vec_id"), s"$ctrl/index")
     def probe(root: String) =
-      Similarity.ivfProbeStoredPq(spark, root,
+      PqIvf.probe(spark, root,
         excludeVecId = Some(0L)).collect().toSeq
     assert(probe(cur) == probe(ctrl),
       "stream-built PQ layout diverges from the batch control")
@@ -2074,7 +2076,7 @@ class StreamingSpec extends SparkTestBase {
     val committed = IvfMaintain.committedBatch(spark, cur)
     assert(committed == feed.size - 1L)
     val before = spark.read.parquet(s"$cur/index").count()
-    assert(!IvfMaintain.applyBatchPq(
+    assert(!IvfMaintain.applyBatch(PqIvf,
       Seq(("add", 999999L, Seq.fill(64)(0.5f)))
         .toDF("op", "vec_id", "embedding"),
       committed, cur), "replay must be refused")
@@ -2403,8 +2405,8 @@ class StreamingSpec extends SparkTestBase {
     val rootB = java.nio.file.Files.createTempDirectory("ivfingB").toString
     // ivfLearned is deterministic (integer-snapped Lloyd), so two
     // setups from the same corpus are identical layouts
-    Similarity.ivfServingSetup(spark, sfDir, rootA)
-    Similarity.ivfServingSetup(spark, sfDir, rootB)
+    FullIvf.build(spark, sfDir, rootA)
+    FullIvf.build(spark, sfDir, rootB)
     val maxId = spark.read.parquet(s"$rootA/index")
       .agg(max($"vec_id")).head().getLong(0)
     // the "new crawl batch": existing vectors re-keyed past the max id
@@ -2422,17 +2424,16 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
     // control: ONE batch ivfAppend of the same rows against the same
     // frozen centroids
-    Similarity.ivfAppend(delta,
-      spark.read.parquet(s"$rootB/_cents"), s"$rootB/index")
+    FullIvf.append(spark, rootB, delta)
     def census(root: String) = spark.read.parquet(s"$root/index")
       .groupBy($"cell").agg(count(lit(1)).as("n"), sum($"vec_id").as("sv"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
     assert(census(rootA) == census(rootB),
       "streamed cells diverge from batch ivfAppend")
-    assert(Similarity.ivfProbeStored(spark, rootA,
+    assert(FullIvf.probe(spark, rootA,
         excludeVecId = Some(0L)).collect().toSeq ==
-      Similarity.ivfProbeStored(spark, rootB,
+      FullIvf.probe(spark, rootB,
         excludeVecId = Some(0L)).collect().toSeq,
       "probe after streamed ingest diverges from batch append")
     // replay: an already-committed batch id is refused untouched
